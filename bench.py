@@ -34,12 +34,7 @@ Methodology (round-3 overhead work):
 - **Honest caches** — spark.catalog.clearCache() runs before EVERY
   timed run, so sketch operators' internal .cache() intermediates are
   recomputed each run instead of turning the steady-state number into
-  a cache-hit measurement. SPARK_GRAFT_CACHE_TABLES=1 opts into the
-  repartitioned in-memory table relations (useful for long-lived
-  server sessions; the test corpus has ONE parquet row group per
-  table, capping every cold scan at a single task — DuckDB
-  parallelizes within a row group, Spark cannot); it is left OFF here
-  so bench numbers include the real scan.
+  a cache-hit measurement, and bench numbers include the real scan.
 - **Host-noise canary** (round 10; BASELINE.md protocol) — a FROZEN
   workload (scan + filter + hash agg over lineitem, never edited
   round-over-round) runs before and after the suite; its medians ship

@@ -111,30 +111,7 @@ class Tables(Mapping):
 
     def __getitem__(self, name: str) -> DataFrame:
         if name not in self._cache:
-            df = load_table(self._spark, self._sf_dir, name)
-            if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
-                # MemTable-style shared relation (bench opt-in): the test
-                # corpus writes ONE parquet row group per table, which caps
-                # Spark's scan at a single task no matter the split size
-                # (DuckDB parallelizes inside a row group; Spark cannot).
-                # Repartitioning into the in-memory columnar cache restores
-                # scan parallelism for every later query. Sized ~256 KB of
-                # file bytes per partition, clamped to [4, cpus].
-                from .session import default_parallelism
-
-                try:
-                    nbytes = os.path.getsize(table_path(self._sf_dir, name))
-                except OSError:
-                    nbytes = 0
-                if name in ("documents", "embeddings"):
-                    # Derived work (shingling, 64-way hashing, vector math)
-                    # scales with rows, not file bytes — always give these
-                    # full parallelism.
-                    parts = default_parallelism()
-                else:
-                    parts = max(4, min(default_parallelism(), nbytes // (256 << 10)))
-                df = df.repartition(parts).cache()
-            self._cache[name] = df
+            self._cache[name] = load_table(self._spark, self._sf_dir, name)
         return self._cache[name]
 
     def __iter__(self) -> Iterator[str]:

@@ -32,8 +32,6 @@ corpus (property-tested against an independent naive reference).
 
 from __future__ import annotations
 
-import os as _os
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +40,7 @@ from pyspark.sql import functions as F
 # x (word bytes + symbol list) is low hundreds of MB — the practical
 # ceiling of the reference implementation shape; beyond it, fail
 # loudly rather than grind/OOM.
-_BPE_VOCAB_MAX = int(_os.environ.get("SPARK_GRAFT_BPE_VOCAB_MAX", "2000000"))
+_BPE_VOCAB_MAX = 2_000_000
 
 END = "</w>"  # end-of-word marker (paper convention)
 
@@ -125,9 +123,8 @@ def learn_bpe(
     rows = word_counts(docs, text_col).limit(_BPE_VOCAB_MAX + 1).collect()
     if len(rows) > _BPE_VOCAB_MAX:
         raise ValueError(
-            f"BPE vocab exceeds {_BPE_VOCAB_MAX} distinct words; raise "
-            "SPARK_GRAFT_BPE_VOCAB_MAX or pre-filter the corpus (min "
-            "word frequency) before training"
+            f"BPE vocab exceeds {_BPE_VOCAB_MAX} distinct words; "
+            "pre-filter the corpus (min word frequency) before training"
         )
     # word -> (symbol tuple, count); chars + end-of-word marker
     vocab: dict[tuple, int] = {}

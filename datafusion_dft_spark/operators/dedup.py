@@ -32,8 +32,6 @@ does).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -55,9 +53,7 @@ BANDS = 16
 # a flat 100k default contradicted its own evidence); it is the ratio
 # rule in _incr_should_broadcast below, derived from the bytes model
 # that receipt and BENCH_INCR_BYTES ground.
-_INCR_BROADCAST_MAX_BATCH = int(
-    os.environ.get("SPARK_GRAFT_INCR_BROADCAST_MAX_BATCH", "100000")
-)
+_INCR_BROADCAST_MAX_BATCH = 100_000
 
 
 def _incr_should_broadcast(spark, n_batch: int, n_corpus: int) -> bool:

@@ -243,8 +243,7 @@ def fuzzy_best_match(
     if n_probe > _MODEL_BROADCAST_MAX_ROWS:
         raise ValueError(
             f"fuzzy_best_match: more than {_MODEL_BROADCAST_MAX_ROWS} "
-            "distinct query strings exceed the broadcast budget "
-            "(SPARK_GRAFT_MODEL_BROADCAST_MAX_ROWS). The non-broadcast "
+            "distinct query strings exceed the broadcast budget. The non-broadcast "
             "fallback would shuffle both sides on the first-character "
             "block key (<= |alphabet| distinct values — pathological "
             "skew), so it is not applied silently: split the query "

@@ -1117,506 +1117,6 @@ def extract_features(
     return binary_df.select(*needed).mapInArrow(run, schema=schema)
 
 
-# --- pure-JVM feature extraction (no Python stage) --------------------------
-#
-# The r14 simhash pattern (guide §4.1) applied to the header decoders:
-# every parse above reads a bounded number of header bytes at fixed or
-# walked offsets — exactly what `substring`/`conv`/bitwise expressions
-# and bounded `aggregate` folds express natively in the JVM. The
-# measured dominant cost of `extract_features` at bench scale is the
-# mapInArrow stage-launch round trip (the standing 9.7x-DuckDB PROXY
-# flag since r7), not the byte math; these formulations remove the
-# Python boundary outright while computing BIT-IDENTICAL results (the
-# scalar Python parsers remain the reference — differential tests pin
-# every branch in tests/test_multimodal.py).
-#
-# Expression-engineering notes (same discipline as dedup._simhash_fp_sql):
-# - every byte read is bounds-checked BEFORE it evaluates (CASE is
-#   lazy), mirroring the scalar parsers' explicit length guards;
-# - marker/chunk/box walks run as `aggregate` folds over
-#   sequence(1, K) with a struct accumulator — K bounds the number of
-#   loop iterations (not the expression size: the lambda is one tree
-#   evaluated K times). K is chosen far above any spec-shaped header
-#   (JPEG: 64 segments before SOF; WAV: 32 chunks before "data"; MP4:
-#   32 top-level boxes / 32 moov children); a pathological file past
-#   the cap parses as unrecognized, and the differential tests pin the
-#   caps;
-# - ANSI-safety: all positions/sizes stay in long arithmetic; any
-#   64-bit size field whose high word >= 2^31 ends the walk (observable
-#   outcome identical to the scalar walk, which steps past EOF and
-#   stops); substring positions are cast to int only AFTER the bound
-#   check proves pos <= length (< 2^31 for any JVM byte array);
-# - each parser yields ONE struct that a second projection unpacks.
-#   CollapseProject does not inline a non-cheap expression referenced
-#   more than once (verified: `aggregate(` appears once per parser in
-#   the physical plan), so every fold evaluates once per row.
-
-
-def _u8_sql(c: str, p) -> str:
-    """Unsigned byte value at 1-based position ``p`` (caller bounds-checks)."""
-    return f"cast(conv(hex(substring({c}, cast(({p}) as int), 1)), 16, 10) as long)"
-
-
-def _be_sql(c: str, p, k: int) -> str:
-    """Big-endian unsigned ``k``-byte read (k <= 7 so the long cast is safe)."""
-    return f"cast(conv(hex(substring({c}, cast(({p}) as int), {k})), 16, 10) as long)"
-
-
-def _le_sql(c: str, p, k: int) -> str:
-    """Little-endian unsigned ``k``-byte read (k <= 7)."""
-    terms = [
-        f"shiftleft({_u8_sql(c, f'({p}) + {i}')}, {8 * i})" if i else _u8_sql(c, p)
-        for i in range(k)
-    ]
-    return "(" + " | ".join(terms) + ")"
-
-
-def _image_header_sql(c: str) -> str:
-    """struct<fmt,w,h,ch> — bit-identical to ``parse_image_header``.
-
-    PNG is a pure fixed-offset read; JPEG is the T.81 marker-segment
-    walk as a bounded fold (fill-byte runs consume one step each,
-    standalone markers skip, SOF0-SOF15 minus DHT/JPG/DAC terminate
-    with the frame header fields, corrupt lengths stop the walk).
-    """
-    n = f"length({c})"
-    null_img = "cast(null as struct<fmt:string,w:bigint,h:bigint,ch:bigint>)"
-    png = (
-        f"named_struct('fmt', 'png', 'w', {_be_sql(c, 17, 4)}, "
-        f"'h', {_be_sql(c, 21, 4)}, 'ch', "
-        f"CASE {_u8_sql(c, 26)} WHEN 0 THEN 1L WHEN 2 THEN 3L WHEN 3 THEN 1L "
-        f"WHEN 4 THEN 2L WHEN 6 THEN 4L ELSE cast(null as long) END)"
-    )
-
-    def walk(pos):
-        return (
-            f"named_struct('pos', cast(({pos}) as long), 'w', s.w, 'h', s.h, "
-            f"'nc', s.nc, 'st', 0)"
-        )
-
-    dead = "named_struct('pos', s.pos, 'w', s.w, 'h', s.h, 'nc', s.nc, 'st', 2)"
-    found = (
-        f"named_struct('pos', s.pos, 'w', {_be_sql(c, 's.pos+7', 2)}, "
-        f"'h', {_be_sql(c, 's.pos+5', 2)}, 'nc', {_u8_sql(c, 's.pos+9')}, 'st', 1)"
-    )
-    marker = _u8_sql(c, "s.pos+1")
-    seglen = _be_sql(c, "s.pos+2", 2)
-    is_sof = f"({marker} >= 192 AND {marker} <= 207 AND {marker} NOT IN (196, 200, 204))"
-    step = f"""CASE
-      WHEN s.st <> 0 THEN s
-      WHEN s.pos + 1 > {n} THEN {dead}
-      WHEN {_u8_sql(c, 's.pos')} <> 255 THEN {dead}
-      WHEN {marker} = 255 THEN {walk('s.pos + 1')}
-      WHEN {marker} = 216 OR {marker} = 1 OR ({marker} >= 208 AND {marker} <= 215)
-        THEN {walk('s.pos + 2')}
-      WHEN {marker} = 217 OR {marker} = 218 THEN {dead}
-      WHEN s.pos + 3 > {n} THEN {dead}
-      WHEN {seglen} < 2 THEN {dead}
-      WHEN {is_sof} THEN
-        CASE WHEN s.pos + 9 > {n} THEN {dead} ELSE {found} END
-      ELSE {walk(f's.pos + 2 + {seglen}')}
-    END"""
-    jpeg = f"""aggregate(
-      sequence(1, 64),
-      named_struct('pos', 3L, 'w', cast(null as long), 'h', cast(null as long),
-                   'nc', cast(null as long), 'st', 0),
-      (s, i) -> {step},
-      s -> CASE WHEN s.st = 1
-                THEN named_struct('fmt', 'jpeg', 'w', s.w, 'h', s.h, 'ch', s.nc)
-                ELSE {null_img} END
-    )"""
-    return f"""CASE
-      WHEN {n} >= 26 AND substring({c}, 1, 8) = X'89504E470D0A1A0A'
-           AND substring({c}, 13, 4) = X'49484452' THEN ({png})
-      WHEN {n} >= 4 AND {_u8_sql(c, 1)} = 255 AND {_u8_sql(c, 2)} = 216 THEN ({jpeg})
-      ELSE {null_img}
-    END"""
-
-
-def _audio_header_sql(c: str) -> str:
-    """struct<fmt,rate,ch,bits,nsamp> — bit-identical to
-    ``parse_audio_header``.
-
-    FLAC is a pure fixed-offset bit-unpack (spec mandates STREAMINFO
-    first); WAV is the RIFF chunk walk as a bounded fold (word-aligned
-    skips, "fmt " fields captured, declared "data" size terminates).
-    """
-    n = f"length({c})"
-    null_aud = (
-        "cast(null as struct<fmt:string,rate:bigint,ch:bigint,"
-        "bits:bigint,nsamp:bigint>)"
-    )
-    flac = f"""CASE WHEN {_be_sql(c, 6, 3)} < 34 THEN {null_aud}
-      ELSE named_struct('fmt', 'flac',
-        'rate', (shiftleft({_u8_sql(c, 19)}, 12) | shiftleft({_u8_sql(c, 20)}, 4)
-                 | shiftright({_u8_sql(c, 21)}, 4)),
-        'ch', ((shiftright({_u8_sql(c, 21)}, 1) & 7L) + 1),
-        'bits', ((shiftleft({_u8_sql(c, 21)} & 1L, 4)
-                  | shiftright({_u8_sql(c, 22)}, 4)) + 1),
-        'nsamp', (shiftleft({_u8_sql(c, 22)} & 15L, 32)
-                  | shiftleft({_u8_sql(c, 23)}, 24) | shiftleft({_u8_sql(c, 24)}, 16)
-                  | shiftleft({_u8_sql(c, 25)}, 8) | {_u8_sql(c, 26)}))
-      END"""
-
-    sz = _le_sql(c, "s.pos + 4", 4)
-
-    def walk(pos, extra=""):
-        fields = {
-            "pos": f"cast(({pos}) as long)",
-            "rate": "s.rate", "ch": "s.ch", "bits": "s.bits", "dsz": "s.dsz",
-            "st": "0",
-        }
-        for kv in filter(None, extra.split(";")):
-            k, v = kv.split("=", 1)
-            fields[k.strip()] = v
-        return (
-            "named_struct("
-            + ", ".join(f"'{k}', {v}" for k, v in fields.items())
-            + ")"
-        )
-
-    corrupt = (
-        "named_struct('pos', s.pos, 'rate', s.rate, 'ch', s.ch, "
-        "'bits', s.bits, 'dsz', s.dsz, 'st', 2)"
-    )
-    ended = (
-        "named_struct('pos', s.pos, 'rate', s.rate, 'ch', s.ch, "
-        "'bits', s.bits, 'dsz', s.dsz, 'st', 1)"
-    )
-    data_found = (
-        f"named_struct('pos', s.pos, 'rate', s.rate, 'ch', s.ch, "
-        f"'bits', s.bits, 'dsz', {sz}, 'st', 1)"
-    )
-    next_pos = f"s.pos + 8 + {sz} + ({sz} & 1L)"
-    step = f"""CASE
-      WHEN s.st <> 0 THEN s
-      WHEN s.pos + 7 > {n} THEN {ended}
-      WHEN substring({c}, cast(s.pos as int), 4) = X'666D7420' THEN
-        CASE WHEN {sz} < 16 OR s.pos + 23 > {n} THEN {corrupt}
-        ELSE {walk(next_pos,
-                   f"ch={_le_sql(c, 's.pos + 10', 2)};"
-                   f"rate={_le_sql(c, 's.pos + 12', 4)};"
-                   f"bits={_le_sql(c, 's.pos + 22', 2)}")} END
-      WHEN substring({c}, cast(s.pos as int), 4) = X'64617461' THEN {data_found}
-      ELSE {walk(next_pos)}
-    END"""
-    wav = f"""aggregate(
-      sequence(1, 32),
-      named_struct('pos', 13L, 'rate', cast(null as long), 'ch', cast(null as long),
-                   'bits', cast(null as long), 'dsz', cast(null as long), 'st', 0),
-      (s, i) -> {step},
-      s -> CASE WHEN s.st = 2 OR s.rate IS NULL THEN {null_aud}
-           ELSE named_struct('fmt', 'wav', 'rate', s.rate, 'ch', s.ch,
-             'bits', s.bits, 'nsamp',
-             CASE WHEN s.dsz IS NOT NULL AND s.ch * (s.bits div 8) > 0
-                  THEN s.dsz div (s.ch * (s.bits div 8))
-                  ELSE cast(null as long) END)
-           END
-    )"""
-    return f"""CASE
-      WHEN {n} >= 42 AND substring({c}, 1, 4) = X'664C6143'
-           AND ({_u8_sql(c, 5)} & 127L) = 0 THEN ({flac})
-      WHEN {n} >= 12 AND substring({c}, 1, 4) = X'52494646'
-           AND substring({c}, 9, 4) = X'57415645' THEN ({wav})
-      ELSE {null_aud}
-    END"""
-
-
-def _video_header_sql(c: str) -> str:
-    """struct<fmt,brand,ts,dur,trk> — bit-identical to
-    ``parse_video_header``.
-
-    The ISO-BMFF box walk as a bounded fold; a nested fold walks each
-    moov box's children in place (so multi-moov files accumulate trak
-    counts and last-mvhd-wins exactly like the scalar walk). Declared
-    64-bit sizes are read as hi/lo 32-bit halves and clamped to
-    ``length + 16`` — behavior-identical to the scalar walk (any size
-    reaching past EOF parses this box against the clamped extent and
-    then stops) while keeping every position strictly below 2^33, so
-    no long arithmetic can overflow under ANSI.
-
-    Expression-SIZE discipline (measured, r15): instantiating the step
-    body once per size-convention branch (32-bit / 64-bit / to-EOF,
-    outer x inner) ballooned the tree to ~51 KB and cost ~0.5 s at
-    sf0.1 where the similarly-shaped audio fold costs ~0.005 s. Each
-    step therefore BINDS ``(size, hdr)`` as a 1-element binder fold
-    (the dedup._simhash_fp_sql bind-once trick) so the body exists
-    once, and the moov child walk carries its clamped extent in the
-    accumulator (``t.e``) instead of re-inlining the size expression
-    at every read. ~6 KB total; measured at the audio fold's cost.
-    """
-    n = f"length({c})"
-    nlong = f"cast({n} as long)"
-    null_vid = (
-        "cast(null as struct<fmt:string,brand:string,ts:bigint,"
-        "dur:bigint,trk:bigint>)"
-    )
-    maxlong = "9223372036854775807L"
-
-    # ---- inner fold: children of one moov box ----
-    # 0-based child cursor t.j; the 0-based exclusive end rides the
-    # accumulator as t.e (bound once at moov entry).
-    csz32 = _be_sql(c, "t.j + 1", 4)
-    chi = _be_sql(c, "t.j + 9", 4)
-    clo = _be_sql(c, "t.j + 13", 4)
-    ctyp = f"substring({c}, cast(v.j + 5 as int), 4)"
-
-    def tnext(j, **kw):
-        fields = {
-            "j": f"cast(({j}) as long)",
-            "ts": "v.ts", "dur": "v.dur", "found": "v.found",
-            "trk": "v.trk", "tst": "0", "e": "v.e",
-        }
-        fields.update(kw)
-        return (
-            "named_struct("
-            + ", ".join(f"'{k}', {val}" for k, val in fields.items())
-            + ")"
-        )
-
-    def tend(var: str) -> str:
-        return (
-            f"named_struct('j', {var}.j, 'ts', {var}.ts, 'dur', {var}.dur, "
-            f"'found', {var}.found, 'trk', {var}.trk, 'tst', 1, 'e', {var}.e)"
-        )
-
-    ver = _u8_sql(c, "v.j + cx.ch + 1")
-    dur0 = _be_sql(c, "v.j + cx.ch + 17", 4)
-    dhi = _be_sql(c, "v.j + cx.ch + 25", 4)
-    dlo = _be_sql(c, "v.j + cx.ch + 29", 4)
-    mvhd_v0 = (
-        "CASE WHEN v.j + cx.ch + 20 <= v.e THEN "
-        + tnext(
-            "v.j + cx.csz",
-            ts=_be_sql(c, "v.j + cx.ch + 13", 4),
-            dur=(
-                f"CASE WHEN {dur0} = 4294967295 THEN cast(null as long) "
-                f"ELSE {dur0} END"
-            ),
-            found="1",
-        )
-        + " ELSE " + tnext("v.j + cx.csz") + " END"
-    )
-    mvhd_v1 = (
-        "CASE WHEN v.j + cx.ch + 32 <= v.e THEN "
-        + tnext(
-            "v.j + cx.csz",
-            ts=_be_sql(c, "v.j + cx.ch + 21", 4),
-            dur=(
-                f"CASE WHEN {dhi} >= 2147483648 THEN cast(null as long) "
-                f"ELSE (shiftleft({dhi}, 32) | {dlo}) END"
-            ),
-            found="1",
-        )
-        + " ELSE " + tnext("v.j + cx.csz") + " END"
-    )
-    child_body = f"""CASE
-      WHEN cx.csz < 0 THEN {tend('v')}
-      WHEN cx.csz < cx.ch THEN {tend('v')}
-      WHEN {ctyp} = X'6D766864' AND v.j + cx.ch + 4 <= v.e THEN
-        CASE WHEN {ver} = 0 THEN {mvhd_v0}
-             WHEN {ver} = 1 THEN {mvhd_v1}
-             ELSE {tnext('v.j + cx.csz')} END
-      WHEN {ctyp} = X'7472616B' THEN {tnext('v.j + cx.csz', trk='v.trk + 1')}
-      ELSE {tnext('v.j + cx.csz')}
-    END"""
-    csz64 = (
-        f"least(CASE WHEN {chi} < 2147483648 "
-        f"THEN (shiftleft({chi}, 32) | {clo}) "
-        f"ELSE {maxlong} END, {nlong} + 16)"
-    )
-    # bind (csz, ch) once per child step (-1 = incomplete 64-bit read)
-    child_step = f"""CASE
-      WHEN t.tst <> 0 THEN t
-      WHEN t.j + 8 > t.e THEN {tend('t')}
-      ELSE aggregate(
-        array(named_struct(
-          'csz', CASE WHEN ({csz32}) = 1 THEN
-                   (CASE WHEN t.j + 16 > t.e THEN -1L ELSE ({csz64}) END)
-                 WHEN ({csz32}) = 0 THEN t.e - t.j
-                 ELSE ({csz32}) END,
-          'ch', CASE WHEN ({csz32}) = 1 THEN 16L ELSE 8L END)),
-        t,
-        (v, cx) -> {child_body},
-        v -> v)
-    END"""
-
-    # ---- outer fold: top-level boxes ----
-    sz32 = _be_sql(c, "s.pos", 4)
-    shi = _be_sql(c, "s.pos + 8", 4)
-    slo = _be_sql(c, "s.pos + 12", 4)
-    styp = f"substring({c}, cast(u.pos + 4 as int), 4)"
-
-    def snext(pos, **kw):
-        fields = {
-            "pos": f"cast(({pos}) as long)",
-            "brand": "u.brand", "seen": "u.seen", "ts": "u.ts", "dur": "u.dur",
-            "trk": "u.trk", "st": "0",
-        }
-        fields.update(kw)
-        return (
-            "named_struct("
-            + ", ".join(f"'{k}', {val}" for k, val in fields.items())
-            + ")"
-        )
-
-    def send(var: str) -> str:
-        return (
-            f"named_struct('pos', {var}.pos, 'brand', {var}.brand, "
-            f"'seen', {var}.seen, 'ts', {var}.ts, 'dur', {var}.dur, "
-            f"'trk', {var}.trk, 'st', 1)"
-        )
-
-    ftyp_ok = (
-        f"CASE WHEN u.pos + bx.hdr + 3 <= {n} THEN "
-        + snext(
-            "u.pos + bx.sz",
-            brand=(
-                f"decode(substring({c}, cast(u.pos + bx.hdr as int), 4), "
-                f"'ISO-8859-1')"
-            ),
-            seen="1",
-        )
-        + " ELSE " + snext("u.pos + bx.sz") + " END"
-    )
-    # moov: the inner fold's finish merges the child-walk result into
-    # the OUTER state (last-mvhd-wins, trak counts accumulate); u and
-    # bx stay visible inside the nested lambdas
-    moov_merge = snext(
-        "u.pos + bx.sz",
-        ts="CASE WHEN t.found = 1 THEN t.ts ELSE u.ts END",
-        dur="CASE WHEN t.found = 1 THEN t.dur ELSE u.dur END",
-        trk="u.trk + t.trk",
-    )
-    moov_walk = f"""aggregate(
-      sequence(1, 32),
-      named_struct('j', u.pos - 1 + bx.hdr, 'ts', u.ts, 'dur', u.dur,
-                   'found', 0, 'trk', cast(0 as long), 'tst', 0,
-                   'e', least(u.pos - 1 + bx.sz, {nlong})),
-      (t, q) -> {child_step},
-      t -> {moov_merge})"""
-    box_body = f"""CASE
-      WHEN bx.sz < 0 THEN {send('u')}
-      WHEN bx.sz < bx.hdr THEN {send('u')}
-      WHEN {styp} = X'66747970' THEN
-        CASE WHEN u.pos <> 1 THEN {send('u')} ELSE ({ftyp_ok}) END
-      WHEN {styp} = X'6D6F6F76' THEN ({moov_walk})
-      ELSE {snext('u.pos + bx.sz')}
-    END"""
-    sz64 = (
-        f"least(CASE WHEN {shi} < 2147483648 "
-        f"THEN (shiftleft({shi}, 32) | {slo}) "
-        f"ELSE {maxlong} END, {nlong} + 16)"
-    )
-    outer_step = f"""CASE
-      WHEN s.st <> 0 THEN s
-      WHEN s.pos + 7 > {n} THEN {send('s')}
-      ELSE aggregate(
-        array(named_struct(
-          'sz', CASE WHEN ({sz32}) = 1 THEN
-                  (CASE WHEN s.pos + 15 > {n} THEN -1L ELSE ({sz64}) END)
-                WHEN ({sz32}) = 0 THEN {nlong} - s.pos + 1
-                ELSE ({sz32}) END,
-          'hdr', CASE WHEN ({sz32}) = 1 THEN 16L ELSE 8L END)),
-        s,
-        (u, bx) -> {box_body},
-        u -> u)
-    END"""
-    return f"""aggregate(
-      sequence(1, 32),
-      named_struct('pos', 1L, 'brand', cast(null as string), 'seen', 0,
-                   'ts', cast(null as long), 'dur', cast(null as long),
-                   'trk', cast(0 as long), 'st', 0),
-      (s, i) -> {outer_step},
-      s -> CASE WHEN s.seen = 1 AND s.ts IS NOT NULL
-                THEN named_struct('fmt', 'mp4', 'brand', s.brand, 'ts', s.ts,
-                                  'dur', s.dur, 'trk', s.trk)
-                ELSE {null_vid} END
-    )"""
-
-
-def extract_features_sql(
-    binary_df: DataFrame,
-    image_col: str | None = None,
-    audio_col: str | None = None,
-    video_col: str | None = None,
-) -> DataFrame:
-    """``extract_features`` as pure JVM expressions — zero Python stage.
-
-    Same output columns, same values (differentially pinned against the
-    Arrow path in tests/test_multimodal.py over planted, real-fixture
-    and adversarial corpora). The byte features are one bounded fold
-    over the first 8 bytes; the header decodes are the expression
-    parsers above. One projection computes the parser structs, a second
-    unpacks them (CollapseProject leaves non-cheap multi-referenced
-    expressions in place, so each parser fold evaluates once per row).
-    """
-    blen = "length(content)"
-    # sum of the first min(8, len) bytes: fold the byte positions over
-    # the 8-byte hex prefix (bound once as the 1-element binder array)
-    checksum = """aggregate(
-      array(hex(substring(content, 1, 8))),
-      0L,
-      (a, hx) -> a + aggregate(
-        sequence(0, 7), 0L,
-        (b, i) -> b + CASE WHEN length(hx) >= (i + 1) * 2
-                           THEN cast(conv(substring(hx, i * 2 + 1, 2), 16, 10)
-                                     as long)
-                           ELSE 0L END,
-        b -> b),
-      a -> a
-    )"""
-    cols = [
-        F.col("doc_id"),
-        F.expr(f"cast({blen} as long)").alias("byte_len"),
-        F.expr(checksum).alias("checksum8"),
-        F.expr(f"(cast({blen} as long) + 255) div 256").alias("n_frames"),
-    ]
-    structs = []
-    if image_col is not None:
-        structs.append(("_img", _image_header_sql(image_col)))
-        cols += [
-            F.col("_img.fmt").alias("img_format"),
-            F.col("_img.w").alias("img_width"),
-            F.col("_img.h").alias("img_height"),
-            F.col("_img.ch").alias("img_channels"),
-        ]
-    if audio_col is not None:
-        structs.append(("_aud", _audio_header_sql(audio_col)))
-        cols += [
-            F.col("_aud.fmt").alias("aud_format"),
-            F.col("_aud.rate").alias("aud_rate"),
-            F.col("_aud.ch").alias("aud_channels"),
-            F.col("_aud.bits").alias("aud_bits"),
-            F.col("_aud.nsamp").alias("aud_samples"),
-            F.expr(
-                "CASE WHEN _aud.nsamp IS NOT NULL AND _aud.rate > 0 "
-                "THEN _aud.nsamp * 1000 div _aud.rate "
-                "ELSE cast(null as long) END"
-            ).alias("aud_ms"),
-        ]
-    if video_col is not None:
-        structs.append(("_vid", _video_header_sql(video_col)))
-        cols += [
-            F.col("_vid.fmt").alias("vid_format"),
-            F.col("_vid.brand").alias("vid_brand"),
-            F.col("_vid.ts").alias("vid_timescale"),
-            F.col("_vid.dur").alias("vid_duration"),
-            # int64-safe milliseconds: same guard as _video_header_arrays
-            F.expr(
-                "CASE WHEN _vid.dur IS NOT NULL AND _vid.ts > 0 "
-                "AND _vid.dur <= 9223372036854774 "
-                "THEN _vid.dur * 1000 div _vid.ts "
-                "ELSE cast(null as long) END"
-            ).alias("vid_ms"),
-            F.col("_vid.trk").alias("vid_tracks"),
-        ]
-    staged = binary_df
-    for name, expr in structs:
-        staged = staged.withColumn(name, F.expr(expr))
-    return staged.select(*cols)
-
-
 def extract_features_pandas(binary_df: DataFrame) -> DataFrame:
     """mapInPandas formulation, kept as the differential reference for
     the Arrow-native path (and the slot a pandas-based extractor would

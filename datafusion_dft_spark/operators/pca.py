@@ -35,7 +35,6 @@ no Python in the per-row path.
 
 from __future__ import annotations
 
-import os as _os
 from dataclasses import dataclass
 
 import numpy as np
@@ -45,7 +44,7 @@ from pyspark.sql import functions as F
 
 # Guard: pca_fit collects one row per label; a high-cardinality label
 # column would turn the driver combine into a data pass.
-_MAX_LABELS = int(_os.environ.get("SPARK_GRAFT_PCA_MAX_LABELS", "10000"))
+_MAX_LABELS = 10_000
 
 
 @dataclass(frozen=True)

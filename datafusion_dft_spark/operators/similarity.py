@@ -37,11 +37,8 @@ N_TABLES = 8
 
 # Corpus-size cap for the broadcast-verify rerank in cosine_dup_pairs:
 # 250k x 64 float64 = 128 MB broadcast. Beyond it, the unbounded
-# join-rehydration path runs instead. Env-tunable for deployments with
-# bigger executors (or narrower vectors).
-import os as _os
-
-_BROADCAST_VERIFY_MAX = int(_os.environ.get("SPARK_GRAFT_BROADCAST_VERIFY_MAX", "250000"))
+# join-rehydration path runs instead.
+_BROADCAST_VERIFY_MAX = 250_000
 def as_double(vec: Column | str) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
@@ -625,7 +622,7 @@ def _collect_matrix(raw: DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
 # at or below it, pairs are expanded + deduped in the driver (kills the
 # post-verify distinct); above it, bucket member lists ship instead and
 # the distinct runs on survivors only. 2M pairs x 16 B = 32 MB driver.
-_PAIR_EXPAND_MAX = int(_os.environ.get("SPARK_GRAFT_PAIR_EXPAND_MAX", str(2_000_000)))
+_PAIR_EXPAND_MAX = 2_000_000
 
 
 def _bounded_dup_pairs(
@@ -1132,14 +1129,12 @@ def lsh_topk(
 # (vectorized, blockwise) — the same placement a groupBy gives any hot
 # key. Cells beyond this bound mean n_clusters is mis-sized for the
 # corpus; fail LOUDLY instead of grinding one straggler task.
-_SEMANTIC_CELL_MAX = int(_os.environ.get("SPARK_GRAFT_SEMANTIC_CELL_MAX", "250000"))
+_SEMANTIC_CELL_MAX = 250_000
 
 # Auto-sized K targets this mean cell size: big enough that the fixed
 # per-cell costs amortize, small enough that a cell's O(cell^2)
-# verify stays a sub-second numpy matmul. Env-tunable.
-_SEMANTIC_TARGET_CELL = int(
-    _os.environ.get("SPARK_GRAFT_SEMANTIC_TARGET_CELL", "4096")
-)
+# verify stays a sub-second numpy matmul.
+_SEMANTIC_TARGET_CELL = 4096
 
 
 def _semantic_assign(
@@ -1279,8 +1274,7 @@ def semantic_dup_pairs(
         if n_g > cell_max:
             raise ValueError(
                 f"SemDeDup cell holds {n_g} rows (> {cell_max}); raise "
-                "n_clusters (cells scale as n/K) or "
-                "SPARK_GRAFT_SEMANTIC_CELL_MAX"
+                "n_clusters (cells scale as n/K)"
             )
         empty = pd.DataFrame(
             {
@@ -1519,8 +1513,7 @@ def semantic_dup_pairs_incremental(
         if nb + nc > cell_max:
             raise ValueError(
                 f"SemDeDup cell holds {nb + nc} rows (> {cell_max}); "
-                "raise n_clusters (cells scale as n/K) or "
-                "SPARK_GRAFT_SEMANTIC_CELL_MAX"
+                "raise n_clusters (cells scale as n/K)"
             )
         order = np.argsort(bpdf["cid"].to_numpy())
         b_ids = bpdf["cid"].to_numpy()[order]
@@ -1585,6 +1578,8 @@ def semantic_dup_pairs_multi(
 
     Same loud cell guard as ``semantic_dup_pairs`` (per tagged cell).
     """
+    if not assignments:
+        raise ValueError("assignments must be non-empty")
     tagged = [
         a.select(
             F.lit(int(tag)).alias("cb"), "cid", "cv", "cluster_id"
@@ -1607,8 +1602,7 @@ def semantic_dup_pairs_multi(
         if n_g > cell_max:
             raise ValueError(
                 f"SemDeDup cell holds {n_g} rows (> {cell_max}); raise "
-                "n_clusters (cells scale as n/K) or "
-                "SPARK_GRAFT_SEMANTIC_CELL_MAX"
+                "n_clusters (cells scale as n/K)"
             )
         empty = pd.DataFrame(
             {

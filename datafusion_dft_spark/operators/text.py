@@ -8,8 +8,6 @@ compose them into their own projections.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -22,9 +20,7 @@ from pyspark.sql import functions as F
 # same per-executor ceiling reasoning as the incremental-dedup guard in
 # operators/dedup.py. Above budget the join degrades to the shuffled
 # plan (same result, one exchange of the gram stream per join).
-_MODEL_BROADCAST_MAX_ROWS = int(
-    _os.environ.get("SPARK_GRAFT_MODEL_BROADCAST_MAX_ROWS", "2000000")
-)
+_MODEL_BROADCAST_MAX_ROWS = 2_000_000
 
 # Function words used by the quality/langid heuristics. Keep in sync
 # with the SQL oracles in queries/text.py.

@@ -1,7 +1,7 @@
 """Multimodal pipeline queries: binary columns through Arrow-batched UDFs.
 
 ``multimodal_features`` runs the full pipeline — text → binary payload
-→ mapInPandas feature extraction — and is oracle-checked because the
+→ mapInArrow feature extraction — and is oracle-checked because the
 stand-in features are exact byte math DuckDB can reproduce from the
 source text (ASCII corpus: octet length == char length, checksum8 =
 sum of the first 8 code points).
@@ -58,46 +58,32 @@ from ..registry import query
         FROM base
     """,
     tags=("multimodal", "pandas-udf"),
-    doc="Binary-column pipeline, both Arrow-batch paths in one query "
+    doc="Binary-column pipeline, extraction and frame sampling in one query "
     "(consolidated for the driver's 50-query cap): encode payload -> "
-    "mapInPandas feature extraction, plus the frame-sampling path (explode "
-    "into 256-byte frames, count per doc) joined back as a frames-histogram "
-    "column. Deterministic byte features keep it oracle-checkable. The "
-    "img_* columns are a REAL header decode: structurally valid PNG/JPEG "
-    "bytes are planted JVM-side (plant_images — real IHDR CRC32, real JFIF "
-    "marker layout) and the Arrow stage parses format/width/height/channels "
-    "back OUT of the magic bytes (parse_image_header); the oracle "
-    "recomputes the planted dimension formulas independently, so a "
+    "mapInArrow feature extraction (extract_features), plus the built-in "
+    "frame-sampling path (explode into 256-byte frames, count per doc) "
+    "joined back as a frames-histogram column. Deterministic byte features "
+    "keep it oracle-checkable. The img_* columns are a REAL header decode: "
+    "structurally valid PNG/JPEG bytes are planted JVM-side (plant_images "
+    "— real IHDR CRC32, real JFIF marker layout) and the Arrow stage "
+    "parses format/width/height/channels back OUT of the magic bytes; the "
+    "oracle recomputes the planted dimension formulas independently, so a "
     "planting/parsing disagreement on either side fails the row. The "
-    "parser itself is pinned to real-world fixture bytes in "
-    "tests/test_multimodal.py. Since r15 the extraction formulation is "
-    "a measured COST-MODEL choice: small corpora (parquet-footer row "
-    "count <= SPARK_GRAFT_MM_SQL_MAX_ROWS, default 20k — where the "
-    "mapInArrow stage-launch round trip dominates, the 9.7x-DuckDB "
-    "PROXY flag standing since r7) run PURE JVM EXPRESSIONS "
-    "(extract_features_sql — fixed-offset reads for PNG/FLAC/canonical-"
-    "WAV, bounded aggregate-fold walks for the JPEG marker / RIFF "
-    "chunk / MP4 box traversals, the dedup_simhash SWAR pattern, zero "
-    "Python-eval nodes in the plan); large corpora keep the "
-    "Arrow-batched extract_features (vectorized numpy kernels, ~10x "
-    "cheaper per row than interpreted folds — guide 4.2), which is "
-    "also the real-codec slot. Both formulations are oracle-equal and "
-    "differentially pinned against each other over planted, fixture "
-    "and adversarial corpora in tests/test_multimodal.py. "
-    "The aud_* columns are the same pattern "
-    "for AUDIO: spec-valid RIFF/WAVE PCM headers (even ids — true "
-    "little-endian chunk layout, declared data size encoding the sample "
-    "count) and FLAC fLaC+STREAMINFO blocks (odd ids — bit-packed "
-    "rate/channels/bits/36-bit total samples per the xiph spec) are "
-    "planted JVM-side (plant_audio) and parsed back OUT in the SAME "
-    "Arrow stage (parse_audio_header — no extra Python boundary); "
-    "aud_ms is exact integer math (samples*1000 div rate) on both "
-    "engines. The vid_* columns complete the modality set with VIDEO "
-    "container structure: spec-valid MP4/ISO-BMFF boxes planted "
-    "JVM-side (plant_video — true 108-byte mvhd v0, per-track 92-byte "
-    "tkhd v0) and brand/timescale/duration/track-count walked back out "
-    "of the box tree (parse_video_header — O(#boxes) via declared "
-    "sizes, moov-at-end retry), again in the SAME Arrow stage.",
+    "aud_* columns are the same pattern for AUDIO: spec-valid RIFF/WAVE "
+    "PCM headers (even ids — true little-endian chunk layout, declared "
+    "data size encoding the sample count) and FLAC fLaC+STREAMINFO blocks "
+    "(odd ids — bit-packed rate/channels/bits/36-bit total samples per the "
+    "xiph spec) are planted JVM-side (plant_audio) and parsed back OUT in "
+    "the SAME Arrow stage; aud_ms is exact integer math (samples*1000 div "
+    "rate) on both engines. The vid_* columns complete the modality set "
+    "with VIDEO container structure: spec-valid MP4/ISO-BMFF boxes planted "
+    "JVM-side (plant_video — true 108-byte mvhd v0, per-track 92-byte tkhd "
+    "v0) and brand/timescale/duration/track-count walked back out of the "
+    "box tree (O(#boxes) via declared sizes, moov-at-end retry), again in "
+    "the SAME Arrow stage. The vectorized header kernels are pinned row by "
+    "row to the scalar parse_image_header / parse_audio_header / "
+    "parse_video_header over planted, real-fixture and adversarial "
+    "corpora in tests/test_multimodal.py.",
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
@@ -112,39 +98,11 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "video",
     )
-    # Formulation choice is a measured COST MODEL (r15), not a constant:
-    # the pure-JVM expression extraction (extract_features_sql) removes
-    # the mapInArrow stage-launch round trip — worth -43% at 5k docs,
-    # where that constant dominates — but its interpreted fold walks
-    # cost ~100 us CPU/row vs the Arrow path's ~10 us/row vectorized
-    # numpy kernels (guide §4.2: batch native kernels beat JVM
-    # expression chains on bulk per-row work). Alternating 9-pair A/B:
-    # 5k docs SQL 0.23 s vs Arrow 0.39 s; 50k docs SQL 0.77 s vs Arrow
-    # 0.58 s — crossover ~15-25k rows. Pick per corpus size from the
-    # parquet footer (metadata-only, the ann_pruned_topk pattern;
-    # missing/remote footer -> the scale-safe Arrow path). Both
-    # formulations are oracle-equal and differentially pinned against
-    # each other in tests/test_multimodal.py.
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        nrows = pq.read_metadata(
-            os.path.join(sf_dir, "documents.parquet")
-        ).num_rows
-    except Exception:
-        nrows = None
-    sql_max = int(os.environ.get("SPARK_GRAFT_MM_SQL_MAX_ROWS", "20000"))
-    extractor = (
-        mm.extract_features_sql
-        if nrows is not None and nrows <= sql_max
-        else mm.extract_features
-    )
-    feats = extractor(
+    # one mapInArrow stage decodes all three headers
+    feats = mm.extract_features(
         binary, image_col="image", audio_col="audio", video_col="video"
     )
-    # Frame path: mapInPandas chunking -> per-doc frame count -> histogram.
+    # Frame path: built-in explode chunking -> per-doc frame count -> histogram.
     frames = mm.sample_frames(binary)
     per_doc = frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf"))
     hist = per_doc.groupBy("nf").agg(F.count(F.lit(1)).alias("n_docs_same_frames"))

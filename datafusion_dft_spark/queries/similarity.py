@@ -16,7 +16,21 @@ from ..operators import similarity as sim
 from ..registry import query
 
 _DIM = 64
+# md5 first-hex-char buckets that form the ~25% daily-increment batch of
+# dedup_embedding_cosine (its DuckDB oracle spells the same set). The
+# 'c' bucket is included so the PLANTED near-dup sources (ids 0/1/2 ->
+# md5 first char 'c') land in the batch — without it both incremental
+# arms row-vacuously pass on 0 == 0 at test SF (the same vacuity the
+# planting exists to prevent).
+_BATCH_STRIDE = ("0", "1", "2", "c")
 _N_QUERIES = 10
+
+
+def _in_batch(id_col: str):
+    """True where ``id_col``'s md5 stride bucket is in the batch."""
+    return F.substring(F.md5(F.col(id_col).cast("string")), 1, 1).isin(
+        *_BATCH_STRIDE
+    )
 
 
 @query(
@@ -391,14 +405,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independently and restricts its exhaustive pair join to
     # batch-touching pairs, so the increment path gets its own
     # differential row instead of only the pytest equivalence property.
-    # the 'c' bucket is included so the PLANTED near-dup sources (ids
-    # 0/1/2 -> md5 first char 'c') land in the batch — without it both
-    # incremental arms row-vacuously pass on 0 == 0 at test SF (the
-    # same vacuity the planting exists to prevent)
-    stride = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-    is_batch = stride.isin("0", "1", "2", "c")
-    rel_stride = F.substring(F.md5(F.col("vid").cast("string")), 1, 1)
-    rel_is_batch = rel_stride.isin("0", "1", "2", "c")
+    is_batch = _in_batch("vec_id")
+    rel_is_batch = _in_batch("vid")
     incremental = sim.cosine_dup_pairs_incremental(
         aug.filter(is_batch),
         aug.filter(~is_batch),
@@ -477,11 +485,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_pairs = sim.semantic_dup_pairs_multi(
             [(0, assigned), (1, assigned_ref)], threshold=0.95
         )
-        pair_is_batch = F.substring(
-            F.md5(F.col("id1").cast("string")), 1, 1
-        ).isin("0", "1", "2", "c") | F.substring(
-            F.md5(F.col("id2").cast("string")), 1, 1
-        ).isin("0", "1", "2", "c")
+        pair_is_batch = _in_batch("id1") | _in_batch("id2")
         sem_rows = cell_pairs.select(
             F.explode(
                 F.when(F.col("cb") == 1, F.array(F.lit("semantic_refined")))
@@ -517,9 +521,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r14 cache stays
         if assigned is not None:
             assigned = track_cache(assigned.cache())
-        asg_is_batch = F.substring(F.md5(F.col("cid").cast("string")), 1, 1).isin(
-            "0", "1", "2", "c"
-        )
+        asg_is_batch = _in_batch("cid")
         semantic = sim.semantic_dup_pairs(
             aug, threshold=0.95, dim=_DIM, nrows=nrows, centroids=cents,
             assigned=assigned,

@@ -68,10 +68,11 @@ def query(
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    """Import all query modules and return the registry (name-sorted)."""
+    """Import all query modules and return the registry (name-sorted).
+
+    A module that fails to import raises: skipping it would silently
+    drop its queries from the registry.
+    """
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet — registry stays partial
+        importlib.import_module(mod)
     return dict(sorted(_REGISTRY.items()))

@@ -150,7 +150,8 @@ class DftFlightServer(fl.FlightServerBase):
         middleware = {}
         if fa.basic_auth or fa.bearer_token:
             middleware["auth"] = _AuthMiddlewareFactory(fa.basic_auth, fa.bearer_token)
-        super().__init__(location, middleware=middleware)
+        # every attribute an RPC handler reads is set BEFORE the base
+        # initializer binds the port: it starts serving immediately
         self._spark = spark
         self._flight_conf = fa
         self._obs = Observability(spark, persist_path=config.db_path)
@@ -162,6 +163,7 @@ class DftFlightServer(fl.FlightServerBase):
             "requests_failed": 0,
             "prepared_statements_active": 0,
         }
+        super().__init__(location, middleware=middleware)
 
     def render_metrics(self) -> str:
         """Prometheus text snapshot (the dedicated metrics listener's

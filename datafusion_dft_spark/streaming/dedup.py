@@ -358,8 +358,8 @@ def ingest_batch(
 ) -> None:
     """One ingestion batch: dedup against the signature table, land
     survivors + their signatures. The sink's foreachBatch body, exposed
-    so a plain backfill driver (or the rehearsal harness,
-    tools/rehearsal_stream_sigs.py) runs the EXACT sink code path."""
+    so a plain backfill job (or a scale rehearsal, receipts in
+    BENCH_STREAM_SIGS.json) runs the EXACT sink code path."""
     spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return

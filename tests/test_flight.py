@@ -72,6 +72,27 @@ def test_statement_against_corpus(client, spark):
     assert table.to_pylist() == [{"n": 25, "mn": 0}]
 
 
+def test_state_is_ready_before_the_server_binds(spark):
+    """The base initializer binds the port and serves RPCs at once, so
+    every attribute a handler reads must exist before it runs. pyarrow's
+    FlightServerBase is an immutable type; a class placed between it and
+    DftFlightServer in the MRO observes the instance at that moment."""
+    seen = {}
+
+    class _Probe(fl.FlightServerBase):
+        def __init__(self, *args, **kwargs):
+            for name in ("_spark", "_obs", "_lock", "metrics"):
+                seen[name] = hasattr(self, name)
+            super().__init__(*args, **kwargs)
+
+    class _ProbedServer(DftFlightServer, _Probe):
+        pass
+
+    server = _ProbedServer(spark, "grpc://127.0.0.1:0")
+    server.shutdown()
+    assert seen == {"_spark": True, "_obs": True, "_lock": True, "metrics": True}
+
+
 def test_unknown_ticket_errors(client):
     bad = fl.Ticket(json.dumps({"handle": "no-such-plan"}).encode())
     with pytest.raises(fl.FlightServerError, match="plan not found"):

@@ -723,12 +723,12 @@ def test_decode_video_headers_moov_straddles_prefix(spark):
     assert r.vid_tracks == 3 and r.vid_duration == 42
 
 
-# --- pure-JVM extraction (r15): differential vs the Arrow path --------------
+# --- vectorized extraction vs the scalar reference parsers ------------------
 
 
-def _sql_vs_arrow_corpora(spark):
-    """One binary table mixing planted bytes, real fixture bytes, and
-    adversarial corpora — every parser branch in one relation."""
+def _adversarial_corpora(spark):
+    """One binary table mixing real fixture bytes and adversarial
+    corpora — every parser branch in one relation."""
     import random
 
     fixtures = [
@@ -767,15 +767,30 @@ def _sql_vs_arrow_corpora(spark):
     )
 
 
-def test_extract_features_sql_matches_arrow_path(spark, sf_dir):
-    """The pure-JVM expression extraction (r15 — zero Python stage)
-    must reproduce the Arrow-batched path byte-for-byte: planted
-    pipeline bytes, real fixture bytes built from the public specs,
-    truncations, and seeded mutations. This is the gate that lets the
-    driver query run extract_features_sql while extract_features stays
-    the real-codec slot."""
-    from datafusion_dft_spark.catalog import load_tables
+def _scalar_features(row) -> tuple:
+    """The ``extract_features`` row the scalar parsers predict."""
+    c = bytes(row.content)
+    afmt, rate, ch, bits, nsamp = mm.parse_audio_header(bytes(row.audio))
+    aud_ms = nsamp * 1000 // rate if nsamp is not None and rate else None
+    vfmt, brand, ts, dur, tracks = mm.parse_video_header(bytes(row.video))
+    vid_ms = (
+        dur * 1000 // ts
+        if dur is not None and ts and dur <= (1 << 63) // 1000 - 1
+        else None
+    )
+    return (
+        row.doc_id, len(c), sum(c[:8]), (len(c) + 255) // 256,
+        *mm.parse_image_header(bytes(row.image)),
+        afmt, rate, ch, bits, nsamp, aud_ms,
+        vfmt, brand, ts, dur, vid_ms, tracks,
+    )
 
+
+def test_extract_features_matches_scalar_parsers(spark, sf_dir):
+    """The vectorized header kernels of ``extract_features`` reproduce
+    the scalar parsers row by row: planted pipeline bytes, real fixture
+    bytes built from the public specs, truncations, and seeded
+    mutations."""
     docs = load_tables(spark, sf_dir)["documents"]
     planted = mm.plant_video(
         mm.plant_audio(
@@ -786,37 +801,16 @@ def test_extract_features_sql_matches_arrow_path(spark, sf_dir):
             "doc_id", "audio",
         ),
         "doc_id", "video",
-    )
-    mixed = _sql_vs_arrow_corpora(spark)
-    for b in (planted, mixed):
-        via_arrow = {
+    ).select("doc_id", "content", "image", "audio", "video")
+    adversarial = _adversarial_corpora(spark)
+    # pin the planted rows so both sides see the same input
+    planted = spark.createDataFrame(planted.collect(), adversarial.schema)
+    for b in (planted, adversarial):
+        got = sorted(
             tuple(r)
             for r in mm.extract_features(
                 b, image_col="image", audio_col="audio", video_col="video"
             ).collect()
-        }
-        via_sql = {
-            tuple(r)
-            for r in mm.extract_features_sql(
-                b, image_col="image", audio_col="audio", video_col="video"
-            ).collect()
-        }
-        assert via_arrow == via_sql
-    assert mixed.count() > 100  # the adversarial corpus is non-trivial
-
-
-def test_extract_features_sql_partial_modalities(spark):
-    """Column subsets choose the same schemas as the Arrow path (the
-    modality kwargs gate which parser structs materialize)."""
-    df = spark.createDataFrame(
-        [(1, b"abc", _real_png(4, 5, color_type=2))],
-        "doc_id long, content binary, image binary",
-    )
-    a = mm.extract_features(df, image_col="image")
-    s = mm.extract_features_sql(df, image_col="image")
-    assert [f.name for f in a.schema] == [f.name for f in s.schema]
-    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in s.collect()]
-    a2 = mm.extract_features(df)
-    s2 = mm.extract_features_sql(df)
-    assert [f.name for f in a2.schema] == [f.name for f in s2.schema]
-    assert [tuple(r) for r in a2.collect()] == [tuple(r) for r in s2.collect()]
+        )
+        assert got == sorted(_scalar_features(r) for r in b.collect())
+    assert adversarial.count() > 100  # the adversarial corpus is non-trivial

@@ -526,17 +526,19 @@ def test_simhash_fingerprint_zero_shuffle(spark, sf_dir):
     assert plan.count(") MapInPandas") == 1 and "Generate" in plan, plan
 
 
-def test_multimodal_features_zero_python_stages(spark, sf_dir):
-    """r15 (VERDICT item 3, guide §4.1): the whole multimodal_features
-    plan runs in the JVM — feature extraction and all three header
-    decodes are expression parsers (extract_features_sql), the frames
-    branch is a built-in explode+aggregate, the histogram join
-    broadcasts. Zero Python-eval nodes of ANY kind: the mapInArrow
-    stage-launch round trip was the operator's measured dominant cost
-    (9.7x DuckDB, the last standing PROXY weak since r7)."""
+def test_multimodal_features_single_arrow_stage(spark, sf_dir):
+    """Feature extraction and all three header decodes ride ONE
+    mapInArrow stage; the frames branch is a built-in explode+aggregate
+    and the histogram join broadcasts. Exactly one distinct Python-eval
+    node in the whole plan, and it is the MapInArrow."""
+    # deterministic cache state (see the pipeline_clean_corpus gate)
+    spark.catalog.clearCache()
     df = _build("multimodal_features", spark, sf_dir)
+    plan = ex.formatted_plan(df)
     ids = ex.python_eval_node_ids(df)
-    assert ids == set(), (ids, ex.formatted_plan(df))
+    assert len(ids) == 1, (ids, plan)
+    (node_id,) = ids
+    assert f"MapInArrow ({node_id})" in plan, plan
 
 
 def test_pipeline_clean_corpus_single_python_stage(spark, sf_dir):

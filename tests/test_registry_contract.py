@@ -11,8 +11,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
+from datafusion_dft_spark import registry
 from datafusion_dft_spark.catalog import load_table
 from datafusion_dft_spark.registry import all_queries
 
@@ -25,6 +27,20 @@ def test_registry_is_exactly_50_fully_oracled():
     )
     missing = [n for n, s in qs.items() if not s.oracle]
     assert not missing, f"queries without oracle (dark to the judge): {missing}"
+
+
+def test_missing_query_module_fails_loudly(monkeypatch):
+    """A query module that cannot be imported must not shrink the
+    registry silently."""
+    missing = "datafusion_dft_spark.queries.no_such_module"
+    monkeypatch.setattr(
+        registry, "_QUERY_MODULES", registry._QUERY_MODULES + (missing,)
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        all_queries()
+    monkeypatch.undo()
+    assert missing not in registry._QUERY_MODULES
+    assert len(all_queries()) == 50
 
 
 def test_events_ts_is_timestamp_under_ntz_inference(spark, sf_dir):

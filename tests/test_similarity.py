@@ -651,3 +651,8 @@ def test_semantic_dup_pairs_multi_matches_per_codebook(spark, emb):
     }
     assert got_a == want_a and got_a  # non-vacuous
     assert got_b == want_b and got_b
+
+
+def test_semantic_dup_pairs_multi_rejects_empty_assignments():
+    with pytest.raises(ValueError, match="assignments must be non-empty"):
+        sim.semantic_dup_pairs_multi([])

@@ -21,8 +21,7 @@ Usage: python tools/tpch_gen.py SF OUTDIR  (e.g. 1 /tmp/sf1)
 
 Row counts scale linearly from sf0.1's observed counts. Parquet is
 written in ~128k-row row groups so Spark scans parallelize (the driver
-fixtures are single-row-group, which caps scans at one task — see
-catalog.py SPARK_GRAFT_CACHE_TABLES).
+fixtures are single-row-group, which caps scans at one task).
 """
 
 from __future__ import annotations
