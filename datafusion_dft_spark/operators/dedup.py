@@ -273,9 +273,7 @@ def jaccard_pairs(
     side — the quote/subset-detection grain (Broder's containment
     measure), free here since both set sizes are already joined in.
     """
-    from ..session import track_cache
-
-    sh = track_cache(word_shingles(df, id_col, text_col, k).cache())
+    sh = word_shingles(df, id_col, text_col, k).cache()
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc1"), "shingle")
     b = sh.select(F.col(id_col).alias("doc2"), "shingle")
@@ -325,18 +323,14 @@ def jaccard_verify_candidates(
     # cache both small relations: cand feeds three consumers (docs_in
     # twice via the union + the pair join) and sub feeds two (each side
     # of the pair); uncached, the whole LSH candidate lineage would
-    # re-execute once per consumer — multiplicatively. Both are tracked
-    # so long-lived server sessions can release them post-materialization
-    # (bench/driver runs clear the whole cache between executions).
-    from ..session import track_cache
-
-    cand = track_cache(candidates.select("doc1", "doc2").distinct().cache())
+    # re-execute once per consumer — multiplicatively.
+    cand = candidates.select("doc1", "doc2").distinct().cache()
     docs_in = (
         cand.select(F.col("doc1").alias(id_col))
         .union(cand.select(F.col("doc2").alias(id_col)))
         .distinct()
     )
-    sub = track_cache(
+    sub = (
         df.join(docs_in, id_col, "leftsemi")
         .select(F.col(id_col), shingle_array(text_col, k).alias("sh"))
         .cache()
@@ -486,13 +480,9 @@ def minhash_lsh_pairs(
     pipeline runs once per corpus per execution (guide §4); the
     caller owns caching and parameter consistency.
     """
-    from ..session import track_cache
-
     rows = num_perm // bands
     if sig is None:
-        sig = track_cache(
-            minhash_signatures(df, id_col, text_col, k, num_perm, method=method).cache()
-        )
+        sig = minhash_signatures(df, id_col, text_col, k, num_perm, method=method).cache()
     banded = sig.select(
         F.col(id_col), F.posexplode(_band_hash_array(rows, bands, method)).alias("band", "bandhash")
     )
@@ -603,8 +593,6 @@ def minhash_lsh_pairs_incremental(
     here would just duplicate the parent cache (guide §4/§5). The
     caller owns caching and parameter consistency.
     """
-    from ..session import track_cache
-
     rows = num_perm // bands
     if new_sig is not None:
         if corpus_sig is None:
@@ -616,17 +604,13 @@ def minhash_lsh_pairs_incremental(
         # s1, rerank s2) — cache both, like the self-join variant, or
         # the corpus shingle+signature pass re-executes per consumer
         # and the "corpus scanned once" contract is fiction.
-        sig_new = track_cache(
-            minhash_signatures(new_df, id_col, text_col, k, num_perm, method=method).cache()
-        )
+        sig_new = minhash_signatures(new_df, id_col, text_col, k, num_perm, method=method).cache()
         if corpus_sig is not None:
-            sig_corpus = track_cache(
-                corpus_sig.select(F.col(id_col), F.col("sig")).cache()
-            )
+            sig_corpus = corpus_sig.select(F.col(id_col), F.col("sig")).cache()
         else:
-            sig_corpus = track_cache(
-                minhash_signatures(corpus_df, id_col, text_col, k, num_perm, method=method).cache()
-            )
+            sig_corpus = minhash_signatures(
+                corpus_df, id_col, text_col, k, num_perm, method=method
+            ).cache()
     if check_id_overlap:
         overlap = sig_new.select(id_col).join(sig_corpus.select(id_col), id_col)
         if overlap.limit(1).count():
@@ -738,11 +722,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc1", b_col: str = "do
             break
     edges.unpersist()
     # The surviving generation stays persisted for the caller's
-    # materialization; register it so session teardown can release it
-    # (every superseded generation was already dropped in-loop).
-    from ..session import track_cache
-
-    track_cache(labels)
+    # materialization (every superseded generation was already dropped
+    # in-loop); the caller's spark.catalog.clearCache() releases it.
     return labels.select("member", F.col("label").alias("component"))
 
 

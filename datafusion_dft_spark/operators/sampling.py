@@ -137,11 +137,7 @@ def quality_stratified_sample(
     ``sampling_suite``). Ties at the threshold are INCLUDED (>=) so
     the subset is deterministic under re-runs and engine swaps.
     """
-    from ..session import track_cache
-
-    scored = track_cache(
-        df.select(F.col(id_col), F.col(stratum_col), score.alias("_q")).cache()
-    )
+    scored = df.select(F.col(id_col), F.col(stratum_col), score.alias("_q")).cache()
     th = scored.groupBy(stratum_col).agg(
         F.expr(f"percentile(_q, {quantile})").alias("_t")
     )

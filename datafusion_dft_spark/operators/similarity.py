@@ -254,19 +254,6 @@ def _right_size(df: DataFrame, nrows: int, rows_per_part: int = 4000) -> DataFra
     return df
 
 
-# Built-index reuse for the bounded path: an LSH index over an immutable
-# corpus is built once and probed many times (the same lifecycle every
-# ANN library gives it). Keyed by caller-provided corpus identity (file
-# path + mtime + size) plus every parameter that shapes the result
-# (id/vec columns, threshold, planes, tables, dim, nrows), and by Spark
-# application id (broadcasts are session-bound). Values are (plan,
-# broadcast) so eviction can free the broadcast blocks; each execution
-# of the cached plan still runs the verify job.
-_DUP_PAIR_CACHE: dict[tuple, tuple[DataFrame, object]] = {}
-_DUP_PAIR_CACHE_CAP = 8
-_DUP_PAIR_CACHE_LOCK = __import__("threading").Lock()
-
-
 def sig_relation(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -310,7 +297,6 @@ def cosine_dup_pairs(
     n_tables: int = 24,
     dim: int | None = None,
     nrows: int | None = None,
-    cache_key: tuple | None = None,
     strategy: str | None = None,
     sig_rel: DataFrame | None = None,
 ) -> DataFrame:
@@ -355,49 +341,9 @@ def cosine_dup_pairs(
         nrows <= _BROADCAST_VERIFY_MAX if strategy is None else strategy == "bounded"
     )
     if use_bounded:
-        full_key = None
-        if cache_key is not None:
-            full_key = (
-                cache_key,
-                id_col,
-                vec_col,
-                threshold,
-                n_planes,
-                n_tables,
-                dim,
-                nrows,
-                corpus.sparkSession.sparkContext.applicationId,
-            )
-            with _DUP_PAIR_CACHE_LOCK:
-                hit = _DUP_PAIR_CACHE.pop(full_key, None)
-                if hit is not None:
-                    # LRU: a hit re-inserts so recency, not insertion
-                    # order, decides eviction — a hot index must outlive
-                    # cold ones
-                    _DUP_PAIR_CACHE[full_key] = hit
-            if hit is not None:
-                return hit[0]
-        bounded, bc = _bounded_dup_pairs(
+        return _bounded_dup_pairs(
             corpus.sparkSession, raw, threshold, dim, n_planes, n_tables
         )
-        if full_key is not None:
-            # lock: the FlightSQL/HTTP servers are threaded — eviction
-            # iterating the dict must not race concurrent inserts
-            with _DUP_PAIR_CACHE_LOCK:
-                _DUP_PAIR_CACHE[full_key] = (bounded, bc)
-                while len(_DUP_PAIR_CACHE) > _DUP_PAIR_CACHE_CAP:
-                    # evict the least-recently-used entry (dict order =
-                    # insertion/refresh order) and free its broadcast
-                    # blocks explicitly — a full flush would rebuild every
-                    # hot index, and dropped references alone leave the
-                    # JVM blocks pinned until GC
-                    _, old_bc = _DUP_PAIR_CACHE.pop(next(iter(_DUP_PAIR_CACHE)))
-                    if old_bc is not None:
-                        try:
-                            old_bc.unpersist()
-                        except Exception:
-                            pass  # session gone — nothing to free
-        return bounded
     # ``sig_rel``: a precomputed (vid, v, sigs) relation (sig_relation
     # output, typically cached by a caller that shares it with the
     # incremental formulation) — the signature pass then runs in the
@@ -517,8 +463,6 @@ def cosine_dup_pairs_incremental(
     re-trigger the caller's lineage); the caller owns plane-parameter
     consistency.
     """
-    from ..session import track_cache
-
     if (new_rel is None) != (corpus_rel is None):
         raise ValueError("new_rel and corpus_rel must be provided together")
     if new_rel is not None:
@@ -544,9 +488,7 @@ def cosine_dup_pairs_incremental(
                 F.col(id_col).alias("vid"), as_double(vec_col).alias("v")
             ).filter(valid_vec("v", dim))
             n = raw.count()
-            rel = track_cache(
-                _right_size(raw, n).select("vid", "v", sigs.alias("sigs")).cache()
-            )
+            rel = _right_size(raw, n).select("vid", "v", sigs.alias("sigs")).cache()
             return rel, n
 
         (sig_new, n_new), (sig_corpus, n_corpus) = prep(new_df), prep(corpus_df)
@@ -632,11 +574,8 @@ def _bounded_dup_pairs(
     dim: int,
     n_planes: int,
     n_tables: int,
-) -> tuple[DataFrame, object]:
+) -> DataFrame:
     """Bounded-corpus near-dup path: driver bucketing + distributed verify.
-
-    Returns ``(result_plan, broadcast_or_None)`` so callers that cache
-    the plan can free the broadcast blocks on eviction.
 
     For corpora inside the broadcast budget (<= ``_BROADCAST_VERIFY_MAX``
     rows — the same deliberate materialization as the IVF codebook:
@@ -673,7 +612,7 @@ def _bounded_dup_pairs(
     ids, mat = _collect_matrix(raw, dim)
     empty_schema = "id1 long, id2 long, cosine double"
     if ids.size == 0:
-        return spark.createDataFrame([], empty_schema), None
+        return spark.createDataFrame([], empty_schema)
     order = np.argsort(ids)
     ids_s, mat_s = ids[order], mat[order]
     n = len(ids_s)
@@ -695,13 +634,13 @@ def _bounded_dup_pairs(
         for s, e in zip(starts[sizes >= 2], ends[sizes >= 2]):
             groups.append(np.sort(o[s:e]))
     if not groups:
-        return spark.createDataFrame([], empty_schema), None
+        return spark.createDataFrame([], empty_schema)
     bc = spark.sparkContext.broadcast(
         (ids_s, mat_s, np.linalg.norm(mat_s, axis=1))
     )
     thr = threshold
     if est_pairs > _PAIR_EXPAND_MAX:
-        return _bucket_verify(spark, bc, groups, thr, empty_schema), bc
+        return _bucket_verify(spark, bc, groups, thr, empty_schema)
     pi_parts: list[np.ndarray] = []
     pj_parts: list[np.ndarray] = []
     for g in groups:
@@ -766,7 +705,7 @@ def _bounded_dup_pairs(
         spark.sparkContext.parallelize(rows, len(rows)),
         "pi array<long>, pj array<long>",
     )
-    return bdf.mapInPandas(verify_pairs, empty_schema), bc
+    return bdf.mapInPandas(verify_pairs, empty_schema)
 
 
 def _sieve_pairs(sims, thr: float):

@@ -290,14 +290,10 @@ def bigram_logprob_scores(
     2 words have no bigrams and drop out (inner-join semantics, same
     as the unigram scorer).
     """
-    from ..session import track_cache
-
     g = docs.select(
         F.col(id_col), F.explode(ngrams(text_col, 2)).alias("gram")
     ).withColumn("w1", F.substring_index("gram", " ", 1))
-    c2 = track_cache(
-        g.groupBy("gram").agg(F.count(F.lit(1)).alias("c2")).cache()
-    )
+    c2 = g.groupBy("gram").agg(F.count(F.lit(1)).alias("c2")).cache()
     # c(w1 ·) from the bigram counts: every context position is one
     # bigram occurrence, so summing c2 over grams sharing w1 counts
     # positions 1..n−1 identically to a direct groupBy of the stream.

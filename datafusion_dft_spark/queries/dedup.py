@@ -320,20 +320,16 @@ MINHASH_PAIRS_ORACLE = f"""
     "MinHash.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import track_cache
-
     docs = load_tables(spark, sf_dir)["documents"]
     # ONE cached signature relation feeds the full self-join AND both
     # sides of the incremental arm (r14, guide §4): previously each arm
     # built (and cached) its own signatures, running the shingle→md5→
     # minhash pandas-UDF pipeline ~2x over the corpus per execution.
     # Stride-filtering the shared relation commutes with the per-row
-    # signature math, so results are identical; the cache is rebuilt
-    # every run (the bench clears it) and registered for release at
-    # server request boundaries.
-    sig = track_cache(
-        dd.minhash_signatures(docs, "doc_id", "text", k=5).cache()
-    )
+    # signature math, so results are identical; every build computes
+    # the cache afresh, and callers that re-execute the plan clear it
+    # with spark.catalog.clearCache().
+    sig = dd.minhash_signatures(docs, "doc_id", "text", k=5).cache()
     full = dd.minhash_lsh_pairs(docs, "doc_id", "text", k=5, threshold=0.7, sig=sig)
     stride = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     is_batch = stride.isin("0", "1", "2")

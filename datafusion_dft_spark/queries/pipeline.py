@@ -123,7 +123,6 @@ def export_clean_corpus(
     shards (operators/ordering.py::write_training_shards). Returns the
     shard count."""
     from ..operators.ordering import write_training_shards
-    from ..session import track_cache
 
     # Cache the survivors: the shard writer executes its input twice
     # (guarded prefix pass + write), and the cleaning pipeline upstream
@@ -131,7 +130,7 @@ def export_clean_corpus(
     # to run twice — and must not, or a nondeterministic upstream could
     # hand the two passes different sets. (At real scale, persist the
     # cleaned corpus to storage between the stages instead.)
-    kept = track_cache(clean_corpus_docs(spark, sf_dir, near_dup).cache())
+    kept = clean_corpus_docs(spark, sf_dir, near_dup).cache()
     return write_training_shards(kept, out_dir, "doc_id", seed=seed, shard_rows=shard_rows)
 
 
@@ -155,15 +154,13 @@ def clean_corpus(spark: SparkSession, sf_dir: str, near_dup: str = "lsh") -> Dat
 
 def _kept_and_contam(spark: SparkSession, sf_dir: str, near_dup: str = "lsh"):
     """Shared pipeline core: (surviving docs, per-lang contamination)."""
-    from ..session import track_cache
-
     all_docs = load_tables(spark, sf_dir)["documents"]
     eval_docs = sp.deterministic_sample(all_docs, "doc_id", _EVAL_FRACTION)
     docs = all_docs.filter(sp.hash_bucket("doc_id") >= _EVAL_CUT)
     # The contam relation feeds two consumers (the per-lang count and
     # the anti-join filter); cache it so the gram explode + probe join
     # — the pipeline's most expensive stage — runs once per execution.
-    contam = track_cache(dc.contamination_hits(docs, eval_docs, n=_DECONTAM_N).cache())
+    contam = dc.contamination_hits(docs, eval_docs, n=_DECONTAM_N).cache()
     contam_by_lang = (
         docs.join(contam, "doc_id")
         .groupBy("lang")

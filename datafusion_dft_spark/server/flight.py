@@ -55,6 +55,7 @@ from ..config import AppConfig
 from ..observability import Observability
 from ..sql import contains_copy, prepare_statement, split_statements
 from . import flightsql_proto as fsp
+from .metrics import Metrics
 
 # FIFO cap on stored plans: the reference keeps every request's plan in
 # a HashMap forever (service.rs:181-187 never evicts) — unbounded on a
@@ -158,20 +159,14 @@ class DftFlightServer(fl.FlightServerBase):
         self._lock = threading.Lock()
         self._requests: dict[str, object] = {}  # request_id -> DataFrame (plan)
         self._prepared: dict[str, PreparedStatementHandle] = {}
-        self.metrics = {
-            "requests_total": 0,
-            "requests_failed": 0,
-            "prepared_statements_active": 0,
-        }
+        self.metrics = Metrics("requests_total", "requests_failed", "prepared_statements_active")
         super().__init__(location, middleware=middleware)
 
     def render_metrics(self) -> str:
         """Prometheus text snapshot (the dedicated metrics listener's
         payload — reference serves the same via `--metrics-addr`,
         src/server/mod.rs:112-129)."""
-        from .metrics import render_prometheus
-
-        return render_prometheus(self.metrics)
+        return self.metrics.render()
 
     # ------------------------------------------------------------- helpers
 
@@ -180,7 +175,7 @@ class DftFlightServer(fl.FlightServerBase):
         Truncate the message — a full Java stack trace blows the
         client's gRPC metadata size limit and turns a clean error into
         RESOURCE_EXHAUSTED."""
-        self.metrics["requests_failed"] += 1
+        self.metrics.inc("requests_failed")
         first_line = str(e).split("\n")[0][:512]
         return fl.FlightServerError(f"{prefix}: {first_line}")
 
@@ -366,7 +361,7 @@ class DftFlightServer(fl.FlightServerBase):
     # ------------------------------------------------------------ Flight API
 
     def get_flight_info(self, context, descriptor):
-        self.metrics["requests_total"] += 1
+        self.metrics.inc("requests_total")
         start = time.perf_counter()
         request_id = str(uuid.uuid4())
         cmd, proto = self._parse_command(descriptor.command)
@@ -415,7 +410,7 @@ class DftFlightServer(fl.FlightServerBase):
         ``result_limit`` (mirroring the HTTP server's) is pushed into
         the plan as a GlobalLimit.
         """
-        self.metrics["requests_total"] += 1
+        self.metrics.inc("requests_total")
         start = time.perf_counter()
         parsed = fsp.command_to_dict(ticket.ticket)
         if parsed is not None:
@@ -476,8 +471,8 @@ class DftFlightServer(fl.FlightServerBase):
         opaque NotImplementedError; a stock client deserves a typed
         FlightServerError naming the command it sent, and the attempt
         must land in the observability table like every other request."""
-        self.metrics["requests_total"] += 1
-        self.metrics["requests_failed"] += 1
+        self.metrics.inc("requests_total")
+        self.metrics.inc("requests_failed")
         start = time.perf_counter()
         kind = "non-protobuf descriptor"
         try:
@@ -493,7 +488,7 @@ class DftFlightServer(fl.FlightServerBase):
         )
 
     def do_action(self, context, action):
-        self.metrics["requests_total"] += 1
+        self.metrics.inc("requests_total")
         start = time.perf_counter()
         if action.type in ("create_prepared_statement", "CreatePreparedStatement"):
             # service.rs:563-654 — plan once, hand back handle + IPC schema.
@@ -521,7 +516,7 @@ class DftFlightServer(fl.FlightServerBase):
             schema = _spark_to_arrow_schema(df)
             with self._lock:
                 self._prepared[request_id] = PreparedStatementHandle(df=df, dataset_schema=schema)
-                self.metrics["prepared_statements_active"] = len(self._prepared)
+                self.metrics.set("prepared_statements_active", len(self._prepared))
             self._record(start, request_id, "/do_action/create_prepared_statement", sql, 0)
             schema_bytes = schema.serialize().to_pybytes()
             if proto:
@@ -540,7 +535,7 @@ class DftFlightServer(fl.FlightServerBase):
                 handle = json.loads(raw.decode())["prepared_statement_handle"]
             with self._lock:
                 found = self._prepared.pop(handle, None)
-                self.metrics["prepared_statements_active"] = len(self._prepared)
+                self.metrics.set("prepared_statements_active", len(self._prepared))
             self._record(start, handle, "/do_action/close_prepared_statement", None, 0 if found else 5)
             if found is None:
                 raise fl.FlightServerError(f"prepared statement not found: {handle}")

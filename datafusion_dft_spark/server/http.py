@@ -37,6 +37,7 @@ from flask import Flask, Response, jsonify, request
 from ..config import AppConfig, grpc_location as _grpc_location
 from ..observability import Observability
 from ..sql import prepare_statement, split_statements
+from .metrics import Metrics
 
 
 def _json_conv(v):
@@ -180,22 +181,7 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
     config = config or AppConfig()
     app = Flask("datafusion_dft_spark")
     obs = Observability(spark, persist_path=config.db_path)
-    metrics = {"requests_total": 0, "requests_failed": 0, "rows_returned_total": 0}
-    # Per-path latency histograms (reference: src/telemetry records
-    # per-path request-duration histograms). Cumulative Prometheus
-    # buckets in milliseconds; +Inf is implicit as the count.
-    hist_buckets = (5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000)
-    histograms: dict[str, dict] = {}
-
-    def observe_latency(path: str, ms: float) -> None:
-        h = histograms.setdefault(
-            path, {"counts": [0] * len(hist_buckets), "sum": 0.0, "count": 0}
-        )
-        for i, le in enumerate(hist_buckets):
-            if ms <= le:
-                h["counts"][i] += 1
-        h["sum"] += ms
-        h["count"] += 1
+    metrics = Metrics("requests_total", "requests_failed", "rows_returned_total")
 
     def _ct_eq(a: str, b: str) -> bool:
         # Constant-time compare: '==' short-circuits on the first differing
@@ -218,10 +204,10 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
         return False
 
     def guarded(path: str, sql: str | None, fn):
-        metrics["requests_total"] += 1
+        metrics.inc("requests_total")
         t0 = time.perf_counter()
         if not check_auth():
-            metrics["requests_failed"] += 1
+            metrics.inc("requests_failed")
             obs.record(path, sql, 0, None, 401)
             return jsonify({"error": "unauthorized"}), 401
         # Real cancellation (router.rs:75-81 TimeoutLayer -> 408): the
@@ -248,10 +234,10 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
             payload, n_rows = fn()
             ms = int((time.perf_counter() - t0) * 1000)
             obs.record(path, sql, ms, n_rows, 200)
-            metrics["rows_returned_total"] += n_rows or 0
+            metrics.inc("rows_returned_total", n_rows or 0)
             return jsonify(payload)
         except Exception as e:
-            metrics["requests_failed"] += 1
+            metrics.inc("requests_failed")
             ms = int((time.perf_counter() - t0) * 1000)
             # flightsql-routed requests time out via the per-call gRPC
             # deadline rather than the Spark job-group cancel
@@ -261,16 +247,9 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
             obs.record(path, sql, ms, None, 400)
             return jsonify({"error": str(e).split("\n")[0]}), 400
         finally:
-            observe_latency(path, (time.perf_counter() - t0) * 1000)
+            metrics.observe(path, (time.perf_counter() - t0) * 1000)
             timer.cancel()
             sc.setJobGroup("", "")
-            # Operators that cached multi-consumer intermediates (LSH
-            # candidate sets etc.) register them for release; freeing
-            # them per-request keeps a long-lived server session from
-            # accumulating executor-memory cache entries.
-            from ..session import release_tracked_caches
-
-            release_tracked_caches()
 
     def _flightsql_unavailable():
         """router.rs:98-103 — asking for flightsql routing when the
@@ -468,35 +447,11 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
 
     @app.get("/metrics")
     def prometheus_metrics():
-        lines = [
-            "# TYPE dft_spark_requests_total counter",
-            f"dft_spark_requests_total {metrics['requests_total']}",
-            "# TYPE dft_spark_requests_failed counter",
-            f"dft_spark_requests_failed {metrics['requests_failed']}",
-            "# TYPE dft_spark_rows_returned_total counter",
-            f"dft_spark_rows_returned_total {metrics['rows_returned_total']}",
-            "# TYPE dft_spark_request_duration_ms histogram",
-        ]
-        # snapshot the keys: the dedicated metrics listener scrapes from
-        # its own thread while request threads insert first-seen paths —
-        # iterating the live dict would intermittently raise
-        # "dictionary changed size during iteration"
-        for path in sorted(list(histograms)):
-            h = histograms[path]
-            for le, c in zip(hist_buckets, h["counts"]):
-                lines.append(
-                    f'dft_spark_request_duration_ms_bucket{{path="{path}",le="{le}"}} {c}'
-                )
-            lines.append(
-                f'dft_spark_request_duration_ms_bucket{{path="{path}",le="+Inf"}} {h["count"]}'
-            )
-            lines.append(f'dft_spark_request_duration_ms_sum{{path="{path}"}} {h["sum"]:.3f}')
-            lines.append(f'dft_spark_request_duration_ms_count{{path="{path}"}} {h["count"]}')
-        return Response("\n".join(lines) + "\n", mimetype="text/plain")
+        return Response(metrics.render(), mimetype="text/plain")
 
     # The dedicated metrics listener (--metrics-port) reuses the same
     # rendering so the two exposition points can never disagree.
-    app.dft_render_metrics = lambda: prometheus_metrics().get_data(as_text=True)
+    app.dft_render_metrics = metrics.render
     return app
 
 

@@ -16,21 +16,70 @@ import threading
 from collections.abc import Callable
 
 
-def render_prometheus(metrics: dict, prefix: str = "dft_spark") -> str:
-    """Counters/gauges from a flat name->number dict, Prometheus text.
+# Cumulative latency buckets in milliseconds; +Inf is the count.
+_BUCKETS_MS = (5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000)
 
-    Names ending in ``_active`` (point-in-time populations) render as
-    gauges; everything else as monotonic counters.
+
+class Metrics:
+    """Counters, ``*_active`` gauges and per-path latency histograms
+    behind one lock.
+
+    Flask request threads, Flight RPC threads and the metrics listener
+    all touch one instance, so every update and every render holds the
+    lock: no update is lost, a scrape never sees a histogram bucket
+    ahead of its count, and it never iterates a dict that another
+    thread is growing. Reference analog: the per-path request-duration
+    histograms of src/telemetry.
     """
-    lines = []
-    for name in sorted(metrics):
-        value = metrics[name]
-        if not isinstance(value, (int, float)):
-            continue
-        kind = "gauge" if name.endswith("_active") else "counter"
-        lines.append(f"# TYPE {prefix}_{name} {kind}")
-        lines.append(f"{prefix}_{name} {value}")
-    return "\n".join(lines) + "\n"
+
+    def __init__(self, *names: str):
+        self._lock = threading.Lock()
+        self._values = dict.fromkeys(names, 0)
+        self._hists: dict[str, list[float]] = {}  # path -> buckets..., sum, count
+
+    def __getitem__(self, name: str):
+        with self._lock:
+            return self._values[name]
+
+    def inc(self, name: str, n: int = 1) -> None:
+        with self._lock:
+            self._values[name] += n
+
+    def set(self, name: str, value) -> None:
+        with self._lock:
+            self._values[name] = value
+
+    def observe(self, path: str, ms: float) -> None:
+        with self._lock:
+            h = self._hists.setdefault(path, [0] * (len(_BUCKETS_MS) + 2))
+            for i, le in enumerate(_BUCKETS_MS):
+                if ms <= le:
+                    h[i] += 1
+            h[-2] += ms
+            h[-1] += 1
+
+    def render(self) -> str:
+        """Prometheus text: ``*_active`` names as gauges, the other
+        names as counters, then one histogram series per path."""
+        with self._lock:
+            values = dict(self._values)
+            hists = {path: list(h) for path, h in self._hists.items()}
+        lines = []
+        for name in sorted(values):
+            kind = "gauge" if name.endswith("_active") else "counter"
+            lines.append(f"# TYPE dft_spark_{name} {kind}")
+            lines.append(f"dft_spark_{name} {values[name]}")
+        if hists:
+            series = "dft_spark_request_duration_ms"
+            lines.append(f"# TYPE {series} histogram")
+            for path in sorted(hists):
+                h = hists[path]
+                for le, c in zip(_BUCKETS_MS, h):
+                    lines.append(f'{series}_bucket{{path="{path}",le="{le}"}} {c}')
+                lines.append(f'{series}_bucket{{path="{path}",le="+Inf"}} {h[-1]}')
+                lines.append(f'{series}_sum{{path="{path}"}} {h[-2]:.3f}')
+                lines.append(f'{series}_count{{path="{path}"}} {h[-1]}')
+        return "\n".join(lines) + "\n"
 
 
 def split_addr(addr: str | None) -> tuple[str, int] | None:

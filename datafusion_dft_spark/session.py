@@ -63,7 +63,10 @@ _RUNTIME_CONF: tuple[str, ...] = (
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Cores to plan for: ``SPARK_GRAFT_CPUS`` when set (a deployment
+    override), else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -202,37 +205,6 @@ def _input_bytes(spark: SparkSession, sf_dir: str) -> int:
         return sum(s.getLen() for s in statuses) if statuses else 0
     except Exception:
         return 0  # unreachable store / missing connector — keep defaults
-
-
-_TRACKED_CACHES: list = []
-
-
-def track_cache(df):
-    """Register a persisted DataFrame for deferred release.
-
-    Operators that must ``.cache()`` an intermediate (multi-consumer
-    subtrees like LSH candidate sets) keep correct lazy semantics for
-    one-shot callers, but a long-lived server session would accumulate
-    cache entries across requests. Registering the relation here lets
-    request handlers call :func:`release_tracked_caches` after the
-    result is materialized — the materialize-then-unpersist lifecycle
-    from ``connected_components``, applied at the session boundary.
-    """
-    _TRACKED_CACHES.append(df)
-    return df
-
-
-def release_tracked_caches() -> int:
-    """Unpersist every tracked relation; returns how many were released."""
-    n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to free
-    return n
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:

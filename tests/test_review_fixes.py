@@ -291,6 +291,19 @@ def test_ensure_min_parallelism_guard(spark):
     assert same is wide  # identity — no plan change on wide inputs
 
 
+def test_default_parallelism_falls_back_to_usable_cores(monkeypatch):
+    """Without the SPARK_GRAFT_CPUS override, plan for the cores this
+    process may run on, not a fixed count."""
+    import os
+
+    from datafusion_dft_spark.session import default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert default_parallelism() == 32
+
+
 def test_ensure_min_parallelism_connect_safe_probe():
     """r12 verdict 'what's wrong' #3: a session with no RDD handle
     (Spark Connect) must SKIP the guard with a logged warning, not

@@ -127,7 +127,6 @@ def test_cosine_dup_pairs_join_path_matches_broadcast_path(spark, emb, monkeypat
     from pyspark.sql import functions as F
 
     from datafusion_dft_spark.operators import similarity as sim
-    from datafusion_dft_spark.session import release_tracked_caches
 
     e = emb.select("vec_id", sim.as_double("embedding").alias("embedding"))
     pert = e.filter(F.col("vec_id") < 5).select(
@@ -143,27 +142,7 @@ def test_cosine_dup_pairs_join_path_matches_broadcast_path(spark, emb, monkeypat
     }
     monkeypatch.setattr(sim, "_BROADCAST_VERIFY_MAX", 0)
     via_join = {tuple(r) for r in sim.cosine_dup_pairs(df, threshold=0.9).collect()}
-    release_tracked_caches()
     assert via_broadcast == via_join and via_join
-
-
-def test_dup_pair_cache_keyed_by_corpus_identity(spark, emb):
-    """Built-index reuse: the same cache key returns the identical plan
-    object; a changed key (file mtime/size in production) rebuilds; no
-    key bypasses the cache entirely."""
-    df = emb.select("vec_id", sim.as_double("embedding").alias("embedding"))
-    sim._DUP_PAIR_CACHE.clear()
-    k1 = ("corpus.parquet", 111, 222)
-    a = sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500, cache_key=k1)
-    b = sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500, cache_key=k1)
-    assert a is b  # hit: same corpus identity + parameters
-    c = sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500, cache_key=("corpus.parquet", 999, 222))
-    assert c is not a  # changed file stat -> rebuild
-    d = sim.cosine_dup_pairs(df, threshold=0.9, dim=64, nrows=500, cache_key=k1)
-    assert d is not a  # changed threshold -> different entry
-    e = sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500)
-    assert e is not a  # no key -> uncached build
-    sim._DUP_PAIR_CACHE.clear()
 
 
 def test_bucket_verify_tier_matches_pair_expansion_tier(spark, emb, monkeypatch):
@@ -182,42 +161,6 @@ def test_bucket_verify_tier_matches_pair_expansion_tier(spark, emb, monkeypatch)
     monkeypatch.setattr(sim, "_PAIR_EXPAND_MAX", 0)
     via_buckets = {tuple(r) for r in sim.cosine_dup_pairs(aug, threshold=0.9).collect()}
     assert via_pairs == via_buckets and via_buckets
-
-
-def test_dup_pair_cache_eviction_is_bounded_and_frees_broadcasts(spark, emb):
-    """A server session cycling through many corpora must keep the index
-    cache bounded, evict oldest-first, and unpersist evicted broadcasts."""
-    df = emb.select("vec_id", sim.as_double("embedding").alias("embedding"))
-    sim._DUP_PAIR_CACHE.clear()
-    for i in range(12):
-        sim.cosine_dup_pairs(
-            df, threshold=0.95, dim=64, nrows=500, cache_key=("corpus", i, i)
-        )
-    assert len(sim._DUP_PAIR_CACHE) <= sim._DUP_PAIR_CACHE_CAP
-    keys = [k[0] for k in sim._DUP_PAIR_CACHE]  # cache_key component
-    assert ("corpus", 11, 11) in keys  # newest survives
-    assert ("corpus", 0, 0) not in keys  # oldest evicted
-    sim._DUP_PAIR_CACHE.clear()
-
-
-def test_dup_pair_cache_is_lru_not_fifo(spark, emb):
-    """A hit refreshes recency: a hot index must survive eviction while
-    cold ones go — fill the cache, touch the oldest entry, overflow, and
-    assert the touched entry survived while the untouched oldest died."""
-    df = emb.select("vec_id", sim.as_double("embedding").alias("embedding"))
-    sim._DUP_PAIR_CACHE.clear()
-    for i in range(sim._DUP_PAIR_CACHE_CAP):
-        sim.cosine_dup_pairs(
-            df, threshold=0.95, dim=64, nrows=500, cache_key=("corpus", i, i)
-        )
-    # touch entry 0 (a hit), making entry 1 the LRU victim
-    sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500, cache_key=("corpus", 0, 0))
-    sim.cosine_dup_pairs(df, threshold=0.95, dim=64, nrows=500, cache_key=("corpus", 99, 99))
-    keys = [k[0] for k in sim._DUP_PAIR_CACHE]
-    assert ("corpus", 0, 0) in keys  # hot entry survived its age
-    assert ("corpus", 1, 1) not in keys  # cold entry evicted instead
-    assert len(sim._DUP_PAIR_CACHE) == sim._DUP_PAIR_CACHE_CAP
-    sim._DUP_PAIR_CACHE.clear()
 
 
 def test_planes_memoized_and_bit_identical():

@@ -155,116 +155,6 @@ def test_supplier_spread_follows_spec_at_scale(spark):
         assert r.ps_suppkey in expect, (r.ps_partkey, r.ps_suppkey)
 
 
-def test_classify_band_rules():
-    """bench.classify_band codifies the BASELINE.md governance rule
-    (r11 verdict task #5): contended = pre/post disagree >1.3x;
-    in-band = both inside the pinned quiet band (cross-round absolutes
-    valid); shifted-band = stable but off the quiet band (the r11
-    host-infrastructure shift — same-session ratios only)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from bench import QUIET_BAND, classify_band
-
-    lo, hi = QUIET_BAND
-    assert classify_band(lo, hi)["band"] == "in-band"
-    assert classify_band(hi * 1.29, hi * 1.2)["band"] == "in-band"
-    # stable-but-shifted (the whole r11 session): ~2x the band
-    assert classify_band(hi * 2.0, hi * 2.2)["band"] == "shifted-band"
-    # faster-than-pinned is also a shift, not license to re-record
-    assert classify_band(lo * 0.5, lo * 0.5)["band"] == "shifted-band"
-    # pre/post disagreement dominates every other classification
-    assert classify_band(lo, lo * 3)["band"] == "contended"
-    out = classify_band(lo, hi)
-    assert out["band_quiet_ref"] == [lo, hi]
-    assert out["band_pre_post_ratio"] >= 1.0
-
-
-def test_should_replace_detail_stamp_guard():
-    """bench.should_replace_detail (r12 verdict 'what's wrong' #2): a
-    worse-stamped run must NOT clobber the committed best-stamped
-    BENCH_DETAIL record; equal-or-better stamps replace (latest wins);
-    --force and unstamped/unparseable records always replace."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from bench import should_replace_detail
-
-    inb = {"band": "in-band"}
-    shf = {"band": "shifted-band"}
-    con = {"band": "contended"}
-    # strictly-better committed record: refuse
-    assert not should_replace_detail(inb, shf)
-    assert not should_replace_detail(inb, con)
-    assert not should_replace_detail(shf, con)
-    # equal or better incoming: replace (latest wins tracks the code)
-    assert should_replace_detail(inb, inb)
-    assert should_replace_detail(shf, shf)
-    assert should_replace_detail(shf, inb)
-    assert should_replace_detail(con, inb)
-    assert should_replace_detail(con, shf)
-    # force overrides the refusal
-    assert should_replace_detail(inb, con, force=True)
-    # missing / unstamped / unparseable existing record: replace
-    assert should_replace_detail(None, con)
-    assert should_replace_detail({}, con)
-    assert should_replace_detail({"band": "???"}, con)
-    # an UNSTAMPED incoming record never displaces a stamped one
-    assert not should_replace_detail(inb, {})
-    # cross-sf runs never replace regardless of stamps (r14: an ad-hoc
-    # sf1 rehearsal must not clobber the driver's sf0.1 record), but
-    # force still overrides and a missing sf on either side is benign
-    sf01_shf = {"band": "shifted-band", "sf": 0.1}
-    sf1_inb = {"band": "in-band", "sf": 1.0}
-    assert not should_replace_detail(sf01_shf, sf1_inb)
-    assert not should_replace_detail(sf1_inb, sf01_shf)
-    assert should_replace_detail(sf01_shf, sf1_inb, force=True)
-    assert should_replace_detail(sf01_shf, {"band": "in-band"})
-    assert should_replace_detail(
-        sf01_shf, {"band": "shifted-band", "sf": 0.1}
-    )
-
-
-def test_sweep_artifact_shape_guard(tmp_path):
-    """tools/sweep_sf1.load_artifact (r13 ADVICE): a parseable file
-    missing the merge keys falls back to the default shape instead of
-    KeyError-ing away the just-measured chunk; a well-formed file loads
-    as-is; a missing/corrupt file yields the default."""
-    import importlib.util
-    import json
-    import sys
-    from pathlib import Path
-
-    tools_dir = Path(__file__).resolve().parents[1] / "tools"
-    sys.path.insert(0, str(tools_dir))  # sweep imports its sibling verify_driver
-    try:
-        spec = importlib.util.spec_from_file_location(
-            "sweep_sf1", tools_dir / "sweep_sf1.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-    finally:
-        sys.path.remove(str(tools_dir))
-
-    fresh = mod.load_artifact(str(tmp_path / "absent.json"))
-    assert fresh == {"queries": {}, "sessions": []}
-
-    bad = tmp_path / "bad.json"
-    bad.write_text(json.dumps({"queries": {"q": {}}}))  # no 'sessions'
-    assert mod.load_artifact(str(bad)) == {"queries": {}, "sessions": []}
-    bad.write_text("[1, 2]")  # not a dict
-    assert mod.load_artifact(str(bad)) == {"queries": {}, "sessions": []}
-    bad.write_text("{corrupt")
-    assert mod.load_artifact(str(bad)) == {"queries": {}, "sessions": []}
-
-    good = tmp_path / "good.json"
-    payload = {"sf_dir": "/tmp/sf1", "queries": {"q": {"err": None}}, "sessions": [{}]}
-    good.write_text(json.dumps(payload))
-    assert mod.load_artifact(str(good)) == payload
-
-
 def test_proxy_detail_protocol_guard(tmp_path):
     """tools/proxy_compare.load_detail (r13 ADVICE): rows measured
     under a different sf_dir or runs count refuse to merge (raise

@@ -50,7 +50,7 @@ def main() -> int:
 
     import pandas as pd  # noqa: F401
 
-    from bench import control_canary_sec, classify_band, make_materializer
+    from bench import make_materializer
     from datafusion_dft_spark.registry import all_queries
     from datafusion_dft_spark.session import get_spark, tune_runtime_conf, default_parallelism
 
@@ -79,7 +79,6 @@ def main() -> int:
         .collect()
     )
 
-    pre = control_canary_sec(spark, args.sf)
     out = {}
     plans_dir = os.path.join(REPO, "plans", args.plans_dir)
     if args.plans:
@@ -127,10 +126,6 @@ def main() -> int:
         out[name] = rec
         print(json.dumps({name: rec}, separators=(",", ":")), flush=True)
         spark.sparkContext.setJobDescription(None)
-    post = control_canary_sec(spark, args.sf)
-    band = classify_band(pre, post)
-    summary = {"control_pre": pre, "control_post": post, **band}
-    print(json.dumps(summary, separators=(",", ":")))
 
     # merge into OPT_MEASURE.json
     path = os.path.join(REPO, "OPT_MEASURE.json")
@@ -143,8 +138,7 @@ def main() -> int:
         merged = {}
     label = args.label or (args.plans or "run")
     for name, rec in out.items():
-        merged.setdefault(name, {})[label] = {**rec, **band,
-                                              "control_pre": pre, "control_post": post}
+        merged.setdefault(name, {})[label] = rec
     with open(path, "w") as f:
         json.dump(merged, f, indent=1, sort_keys=True)
     return 0

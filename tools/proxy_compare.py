@@ -132,8 +132,7 @@ def main() -> int:
     # pool + JVM heap and ends in GC thrash that reads like a host storm
     # (r12 logged every full-run attempt as stormed; r13 reproduced the
     # stall and watched loadavg collapse the moment the process died).
-    # Per-chunk fresh processes bound the blast radius, and every chunk
-    # carries its own canary stamp.
+    # Per-chunk fresh processes bound the blast radius.
     only = set(sys.argv[3:])
 
     # Validate the merge target BEFORE spending minutes measuring — a
@@ -167,13 +166,6 @@ def main() -> int:
     # Warm Spark codegen + Python workers once (bench.py protocol).
     next(iter(specs.values())).build(spark, sf_dir).collect()
 
-    # Host-noise canary (BASELINE.md bench governance): the frozen
-    # control workload brackets the proxy run too, so PROXY.md's
-    # ratios carry their own contamination receipt.
-    from bench import control_canary_sec
-
-    control_pre = control_canary_sec(spark, sf_dir)
-
     # Arrow-first materialization, shared with bench.py so both
     # harnesses measure result delivery identically (DuckDB's fetchall()
     # materializes at the C level; per-row python Row construction would
@@ -184,8 +176,7 @@ def main() -> int:
     for name, spec in sorted(specs.items()):
         df = spec.build(spark, sf_dir)
         run = make_materializer(name, df)  # probe executes once (warm-up)
-        # r14: warm to JIT CONVERGENCE, not a single execution (the
-        # bench.control_canary_sec finding applied here): C2 keeps
+        # r14: warm to JIT CONVERGENCE, not a single execution: C2 keeps
         # tiering a plan's generated code for tens of executions, so a
         # fresh-process chunk read 2-3x the long-warm bench median on
         # sub-100 ms plans (window_rank_suite 0.17-0.35 s here vs
@@ -290,32 +281,18 @@ def main() -> int:
         rows.append((name, s_med, d_med, d_fail))
         print(f"{name}: spark={s_med:.4f} duckdb={'-' if d_med is None else f'{d_med:.4f}'}")
 
-    control_post = control_canary_sec(spark, sf_dir)
-    from bench import classify_band
-
-    band_info = classify_band(control_pre, control_post)
-
     # Merge this chunk into PROXY_DETAIL.json; PROXY.md renders from the
-    # merged state so chunked runs assemble one report. Every row carries
-    # the band stamp of the SESSION that measured it (self-describing per
-    # BASELINE.md governance).
+    # merged state so chunked runs assemble one report.
     # Re-load for the merge: another chunk may have finished while this
     # one measured (the protocol was already validated up front; a file
     # that changed protocol mid-run raises here — measured rows are in
     # the console log).
     detail = load_detail(DETAIL_PATH, sf_dir, runs)
-    session = {
-        "ran": sorted(r[0] for r in rows),
-        "control_sec_pre": control_pre,
-        "control_sec_post": control_post,
-        **band_info,
-    }
-    detail["sessions"].append(session)
+    detail["sessions"].append({"ran": sorted(r[0] for r in rows)})
     for name, s_med, d_med, d_fail in rows:
         detail["rows"][name] = {
             "spark_sec": round(s_med, 4),
             "duckdb_sec": None if d_med is None else round(d_med, 4),
-            "band": band_info["band"],
             # protocol marker: this row was measured under the r14
             # converged (vs single-execution) warm-up on both sides
             "warmup": "converged",
@@ -327,12 +304,6 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = m.group(1).rstrip(".") if m else "?"
     flagged = []
-    canary_lines = [
-        f"- chunk {i}: pre={s['control_sec_pre']:.4f}s"
-        f" post={s['control_sec_post']:.4f}s — **{s['band']}**"
-        f" (ratio {s['band_pre_post_ratio']}x; {len(s['ran'])} queries)"
-        for i, s in enumerate(detail["sessions"], 1)
-    ]
     lines = [
         "# PROXY — per-query Spark steady-state vs DuckDB oracle",
         "",
@@ -344,27 +315,20 @@ def main() -> int:
         " as extra args merge into PROXY_DETAIL.json and this file"
         " re-renders from the merged state): one 50×2-side process"
         " accumulates enough DuckDB buffer pool + JVM heap to end in GC"
-        " thrash. Each row's `band` column is the canary stamp of the"
-        " chunk that measured it (bench.classify_band; in-band: absolutes"
-        " comparable cross-round; shifted-band: same-session ratios only;"
-        " contended: medians unreliable).",
-        "",
-        "Host-noise canaries (BASELINE.md governance), per chunk:",
-        "",
-        *canary_lines,
+        " thrash.",
         "",
         "`gt` marks oracles that are exhaustive ground-truth reformulations"
         " of sketch/index operators (not equivalent plans): the proxy there"
         " is a correctness bound, not a race. Ratios below the 20 ms floor"
         " are scheduler noise, reported but not flagged.",
         "",
-        "| query | spark s | duckdb s | ratio | band | note |",
-        "|---|---|---|---|---|---|",
+        "| query | spark s | duckdb s | ratio | note |",
+        "|---|---|---|---|---|",
     ]
     floor_flags = []
     for name in sorted(detail["rows"]):
         r = detail["rows"][name]
-        s_med, d_med, row_band = r["spark_sec"], r["duckdb_sec"], r["band"]
+        s_med, d_med = r["spark_sec"], r["duckdb_sec"]
         if d_med is None:
             # Render the recorded failure reason, not an inference from
             # GT membership (r13 ADVICE): a dialect/runtime oracle error
@@ -382,7 +346,7 @@ def main() -> int:
             else:
                 why = "no oracle run"
             lines.append(
-                f"| {name} | {s_med:.4f} | - | - | {row_band} | {why} |"
+                f"| {name} | {s_med:.4f} | - | - | {why} |"
             )
             continue
         ratio = s_med / d_med if d_med > 0 else float("inf")
@@ -400,7 +364,7 @@ def main() -> int:
             parts.append(NOTES[name])
         lines.append(
             f"| {name} | {s_med:.4f} | {d_med:.4f} | {ratio:.2f} |"
-            f" {row_band} | {'; '.join(parts)} |"
+            f" {'; '.join(parts)} |"
         )
     lines.append("")
     if flagged:
