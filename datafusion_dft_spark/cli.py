@@ -374,44 +374,32 @@ def main(argv: list[str] | None = None) -> int:
         return run_flightsql_client(args, scripts)
 
     from .catalog import register_db, register_views
+    from .config import AppConfig, load_config
     from .plans.bench import format_report, run_bench, save_csv
-    from .session import get_spark
+    from .session import app_session
     from .sources.io import write_any
     from .sql import execute_ddl_file, prepare_statement, split_statements
 
-    config = None
-    if args.config:
-        from .config import load_config
-
-        config = load_config(args.config, app="cli")
-    conf = dict(config.execution.settings) if config else {}
-    if config and config.execution.cli_batch_size:
+    config = load_config(args.config, app="cli") if args.config else AppConfig()
+    if config.execution.cli_batch_size:
         # docs/config.md cli_batch_size — lands on Arrow batch sizing
         # (toArrow / pandas-UDF transfer units), the Spark analog of the
         # reference's per-app record-batch size.
-        conf.setdefault(
+        config.execution.settings.setdefault(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(config.execution.cli_batch_size),
         )
-    spark = get_spark(
+    # cli_cases/config.rs:59-89 — config ddl_path runs only when
+    # --run-ddl is passed, so a config file can carry DDL without every
+    # invocation replaying it. Tables generated below are registered
+    # after they exist.
+    spark = app_session(
+        config,
+        "datafusion-dft-spark-cli",
         master=args.master,
-        app_name="datafusion-dft-spark-cli",
-        conf=conf or None,
+        register=None if args.generate_tpch else args.register,
+        run_ddl=args.run_ddl,
     )
-    if config:
-        if config.udfs:
-            from .functions.udf_registry import register_udfs
-
-            register_udfs(spark, config.udfs)
-        if config.execution.object_store:
-            from .sources.object_store import register_object_stores
-
-            register_object_stores(spark, config.execution.object_store)
-        if config.execution.ddl_path and args.run_ddl:
-            # cli_cases/config.rs:59-89 — config ddl_path runs only when
-            # --run-ddl is passed, so a config file can carry DDL without
-            # every invocation replaying it.
-            execute_ddl_file(spark, config.execution.ddl_path)
     if args.generate_tpch:
         from .tools.tpch_gen import generate
 
@@ -433,8 +421,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"  {p}")
         if not args.command and not args.file:
             return 0
-    if args.register:
-        register_views(spark, args.register)
+        if args.register:
+            register_views(spark, args.register)
     if args.db:
         register_db(spark, args.db)
     if args.ddl:
@@ -448,9 +436,7 @@ def main(argv: list[str] | None = None) -> int:
     # cli_cases/config.rs:92-118 — [execution] benchmark_iterations is
     # the -n default; an explicit -n wins.
     if args.iterations is None:
-        args.iterations = (
-            config.execution.benchmark_iterations if config else 10
-        )
+        args.iterations = config.execution.benchmark_iterations
 
     last_df: DataFrame | None = None
     bench_results = []

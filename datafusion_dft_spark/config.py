@@ -30,6 +30,8 @@ function = "my_module:add"    # import path to the python callable
 
 from __future__ import annotations
 
+import base64
+import hmac
 import re
 import tomllib
 from dataclasses import dataclass, field
@@ -79,7 +81,6 @@ class FlightClientConfig:
     """
 
     connection_url: str = "http://localhost:50051"
-    benchmark_iterations: int = 10
     basic_auth: str | None = None
     bearer_token: str | None = None
     headers: dict[str, str] = field(default_factory=dict)
@@ -143,8 +144,6 @@ def client_call_headers(
     sources win (cli/mod.rs:877-906) — config headers (+auth derived as
     an authorization header) < headers file (CLI flag or config
     headers_file) < explicit header lines."""
-    import base64
-
     merged: dict[str, str] = {}
     if fc is not None:
         if fc.bearer_token:
@@ -160,6 +159,26 @@ def client_call_headers(
     for h in cli_headers:
         merged.update([parse_header_line(h)])
     return list(merged.items())
+
+
+def credentials_ok(authorization: str, basic: str | None, bearer: str | None) -> bool:
+    """Server-side check of one ``Authorization`` header value against
+    the configured ``basic`` ("user:pass") or ``bearer`` credential —
+    the counterpart of the header ``client_call_headers`` builds
+    (src/server/flightsql/mod.rs:60-105). Nothing configured admits
+    every call. Compares are constant-time: ``==`` stops at the first
+    differing byte and leaks credential prefixes through timing."""
+    if not basic and not bearer:
+        return True
+    if bearer and authorization.startswith("Bearer "):
+        return hmac.compare_digest(authorization[7:].encode(), bearer.encode())
+    if basic and authorization.startswith("Basic "):
+        try:
+            decoded = base64.b64decode(authorization[6:])
+        except ValueError:  # bad padding or non-ASCII input
+            return False
+        return hmac.compare_digest(decoded, basic.encode())
+    return False
 
 
 def grpc_location(url: str) -> str:
@@ -206,14 +225,14 @@ class ExecutionConfig:
     # [execution.object_store] — S3 / HuggingFace store registrations
     # (config.rs:238-241; extensions/s3.rs, extensions/huggingface.rs).
     object_store: "ObjectStoreConfig | None" = None
-    # Per-app record-batch sizing (docs/config.md: cli/flightsql default
-    # 8092, tui 100 — a batch is the TUI's pagination unit). None =
-    # app-side default; explicit values reach Arrow batch sizing (CLI:
-    # spark.sql.execution.arrow.maxRecordsPerBatch), REPL page chunking,
-    # and the Flight stream batch rows.
+    # Per-app record-batch sizing (docs/config.md: cli default 8092, tui
+    # 100 — a batch is the TUI's pagination unit). None = app-side
+    # default; explicit values reach Arrow batch sizing (CLI:
+    # spark.sql.execution.arrow.maxRecordsPerBatch) and REPL page
+    # chunking. The flightsql_server_batch_size key seeds
+    # FlightConfig.stream_batch_rows instead.
     cli_batch_size: int | None = None
     tui_batch_size: int | None = None
-    flightsql_server_batch_size: int | None = None
 
 
 @dataclass
@@ -259,7 +278,6 @@ def _parse_flightsql_client(table: dict) -> FlightClientConfig:
     basic, bearer = _parse_auth(table)
     return FlightClientConfig(
         connection_url=table.get("connection_url", "http://localhost:50051"),
-        benchmark_iterations=int(table.get("benchmark_iterations", 10)),
         basic_auth=basic,
         bearer_token=bearer,
         headers={str(k): str(v) for k, v in (table.get("headers") or {}).items()},
@@ -289,7 +307,6 @@ def parse_config(raw: dict, app: str | None = None) -> AppConfig:
             ),
             cli_batch_size=_opt_int("cli_batch_size"),
             tui_batch_size=_opt_int("tui_batch_size"),
-            flightsql_server_batch_size=_opt_int("flightsql_server_batch_size"),
         ),
         http=HttpConfig(
             result_limit=int(http.get("result_limit", 1000)),

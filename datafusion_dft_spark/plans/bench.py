@@ -52,9 +52,28 @@ class BenchResult:
             }
         return out
 
+    def add(self, phases: dict[str, float]) -> None:
+        for phase, t in phases.items():
+            self.phase_times.setdefault(phase, []).append(t)
+
     @property
     def rows_consistent(self) -> bool:
         return len(set(self.row_counts)) <= 1
+
+
+def _timed_run(spark: SparkSession, sql: str):
+    """One fresh execution of ``sql``: ``(df, {phase: seconds})``. The
+    execute phase runs the FULL plan to a noop sink — timing ``count()``
+    would let Catalyst prune the select list and understate queries
+    whose cost is there."""
+    t0 = time.perf_counter()
+    df = spark.sql(sql)
+    t1 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()  # force physical planning
+    t2 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t3 = time.perf_counter()
+    return df, {"plan": t1 - t0, "physical": t2 - t1, "execute": t3 - t2, "total": t3 - t0}
 
 
 def run_bench(
@@ -65,28 +84,15 @@ def run_bench(
 ) -> BenchResult:
     """Serial benchmark of one SQL statement (reference default: 10 runs).
 
-    The execute phase runs the FULL plan to a noop sink — timing
-    ``count()`` would let Catalyst prune every projection and understate
-    queries whose cost is in the select list. The row count for the
-    result-validation column is taken once, untimed.
+    The row count for the result-validation column is taken once,
+    untimed.
     """
     res = BenchResult(query=sql, runs=iterations, concurrency_mode="serial")
-    res.phase_times = {p: [] for p in PHASES}
     if run_before:
         spark.sql(run_before).write.format("noop").mode("overwrite").save()
     res.row_counts = [spark.sql(sql).count()]  # validation only, untimed
     for _ in range(iterations):
-        t0 = time.perf_counter()
-        df = spark.sql(sql)
-        t1 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()  # force physical planning
-        t2 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
-        res.phase_times["plan"].append(t1 - t0)
-        res.phase_times["physical"].append(t2 - t1)
-        res.phase_times["execute"].append(t3 - t2)
-        res.phase_times["total"].append(t3 - t0)
+        res.add(_timed_run(spark, sql)[1])
     return res
 
 
@@ -96,40 +102,27 @@ def run_bench_concurrent(
     iterations: int = 10,
     run_before: str | None = None,
 ) -> BenchResult:
-    """Concurrent benchmark: min(iterations, cpus) queries in flight.
+    """Concurrent benchmark: min(iterations, cores) queries in flight.
 
     Reference: ``--bench --concurrent`` runs iterations with parallelism
-    min(iterations, num_cpus) (local.rs:422-426). Spark's scheduler
-    multiplexes the concurrent jobs across executor threads (FAIR/FIFO
-    pools) — exactly the contention profile a multi-user deployment sees.
+    min(iterations, num_cpus) (local.rs:422-426); cores here are the
+    session's ``default_parallelism()``. Spark's scheduler multiplexes
+    the concurrent jobs across executor threads (FAIR/FIFO pools) —
+    exactly the contention profile a multi-user deployment sees.
     """
-    import os as _os
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = min(iterations, _os.cpu_count() or 4)
+    from ..session import default_parallelism
+
+    workers = min(iterations, default_parallelism())
     res = BenchResult(query=sql, runs=iterations, concurrency_mode=f"concurrent[{workers}]")
-    res.phase_times = {p: [] for p in PHASES}
     if run_before:
         spark.sql(run_before).write.format("noop").mode("overwrite").save()
 
     res.row_counts = [spark.sql(sql).count()]  # validation only, untimed
-
-    def one(_: int) -> tuple[float, float, float]:
-        t0 = time.perf_counter()
-        df = spark.sql(sql)
-        t1 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()
-        t2 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
-        return (t1 - t0, t2 - t1, t3 - t2)
-
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        for plan_t, phys_t, exec_t in pool.map(one, range(iterations)):
-            res.phase_times["plan"].append(plan_t)
-            res.phase_times["physical"].append(phys_t)
-            res.phase_times["execute"].append(exec_t)
-            res.phase_times["total"].append(plan_t + phys_t + exec_t)
+        for _, phases in pool.map(lambda _: _timed_run(spark, sql), range(iterations)):
+            res.add(phases)
     return res
 
 
@@ -171,20 +164,15 @@ def format_report(res: BenchResult) -> str:
 
 
 def analyze(spark: SparkSession, sql: str) -> dict[str, object]:
-    """--analyze mode: one run + plan summary (stats.rs analog)."""
-    t0 = time.perf_counter()
-    df = spark.sql(sql)
-    t1 = time.perf_counter()
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    t2 = time.perf_counter()
-    n = df.count()
-    t3 = time.perf_counter()
+    """--analyze mode: one run + plan summary (stats.rs analog). The row
+    count is taken untimed, after the timed run."""
+    df, phases = _timed_run(spark, sql)
     return {
-        "rows": n,
-        "plan_sec": t1 - t0,
-        "physical_sec": t2 - t1,
-        "execute_sec": t3 - t2,
-        "physical_plan": physical,
+        "rows": df.count(),
+        "plan_sec": phases["plan"],
+        "physical_sec": phases["physical"],
+        "execute_sec": phases["execute"],
+        "physical_plan": df._jdf.queryExecution().executedPlan().toString(),
         "explain_formatted": df._sc is not None
         and df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

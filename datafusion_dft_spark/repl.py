@@ -280,18 +280,18 @@ class Repl:
 def main(argv: list[str] | None = None) -> int:
     import argparse
 
-    from .catalog import register_views
     from .config import AppConfig, load_config
-    from .session import get_spark
+    from .session import app_session
 
     p = argparse.ArgumentParser(prog="datafusion-dft-spark-repl")
     p.add_argument("--config", help="TOML config file")
     p.add_argument("--register", help="corpus directory to register as views")
     args = p.parse_args(argv)
     config = load_config(args.config, app="tui") if args.config else AppConfig()
-    spark = get_spark(app_name="datafusion-dft-spark-repl", conf=config.execution.settings)
-    if args.register:
-        register_views(spark, args.register)
+    # the configured DDL runs on \ddl run, not at start-up
+    spark = app_session(
+        config, "datafusion-dft-spark-repl", register=args.register, run_ddl=False
+    )
     repl = Repl(
         spark,
         batch_size=config.execution.tui_batch_size or PAGE_SIZE,

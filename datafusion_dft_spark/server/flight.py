@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import base64
 import datetime as dt
-import hmac
 import json
 import threading
 import time
@@ -51,9 +50,9 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 import pyarrow.flight as fl
 
-from ..config import AppConfig
+from ..config import AppConfig, credentials_ok
 from ..observability import Observability
-from ..sql import contains_copy, prepare_statement, split_statements
+from ..sql import contains_copy, execute_sql, split_statements
 from . import flightsql_proto as fsp
 from .metrics import Metrics
 
@@ -76,10 +75,7 @@ class _DeferredCopyScript:
         self.schema = T.StructType([T.StructField("count", T.LongType(), False)])
 
     def execute(self):
-        df = None
-        for stmt in split_statements(self._sql):
-            df = self._spark.sql(prepare_statement(self._spark, stmt))
-        return df
+        return execute_sql(self._spark, self._sql)[-1]
 
 
 @dataclass
@@ -93,31 +89,18 @@ class PreparedStatementHandle:
 
 
 class _AuthMiddlewareFactory(fl.ServerMiddlewareFactory):
-    """Basic/bearer validation, mirroring mod.rs:60-105.
-
-    Uses constant-time compares; the reference delegates to tower-http's
-    ``ValidateRequestHeaderLayer`` which does the same.
-    """
+    """Basic/bearer validation per call (mod.rs:60-105), through the
+    same ``config.credentials_ok`` check the HTTP server uses."""
 
     def __init__(self, basic_auth: str | None, bearer_token: str | None):
         self._basic = basic_auth
         self._bearer = bearer_token
 
     def start_call(self, info, headers):
-        if not self._basic and not self._bearer:
-            return None
         auth = (headers.get("authorization") or headers.get("Authorization") or [""])[0]
-        if self._bearer and auth.startswith("Bearer "):
-            if hmac.compare_digest(auth[7:].encode(), self._bearer.encode()):
-                return None
-        if self._basic and auth.startswith("Basic "):
-            try:
-                decoded = base64.b64decode(auth[6:]).decode()
-            except Exception:
-                decoded = ""
-            if hmac.compare_digest(decoded.encode(), self._basic.encode()):
-                return None
-        raise fl.FlightUnauthenticatedError("invalid credentials")
+        if not credentials_ok(auth, self._basic, self._bearer):
+            raise fl.FlightUnauthenticatedError("invalid credentials")
+        return None
 
 
 def _spark_to_arrow_schema(df) -> pa.Schema:
@@ -193,12 +176,10 @@ class DftFlightServer(fl.FlightServerBase):
                 self._requests.pop(next(iter(self._requests)))
 
     def _sql_to_df(self, sql: str):
-        df = None
-        for stmt in split_statements(sql):
-            df = self._spark.sql(prepare_statement(self._spark, stmt))
-        if df is None:
+        dfs = execute_sql(self._spark, sql)
+        if not dfs:
             raise fl.FlightServerError("empty SQL statement")
-        return df
+        return dfs[-1]
 
     def _plan_statement(self, sql: str):
         """Plan a direct statement for GetFlightInfo.
@@ -651,10 +632,9 @@ def _row_loop_stream(df, schema: pa.Schema, batch_rows: int):
 def main(argv: list[str] | None = None) -> int:
     import argparse
 
-    from ..catalog import register_views
     from ..config import load_config
-    from ..functions.info_schema import refresh_information_schema
-    from ..session import get_spark
+    from ..session import app_session
+    from .metrics import start_metrics_listener
 
     p = argparse.ArgumentParser(prog="datafusion-dft-spark-flight")
     p.add_argument("--host", default="127.0.0.1")
@@ -669,22 +649,15 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     config = load_config(args.config, app="flightsql_server") if args.config else AppConfig()
-    spark = get_spark(app_name="datafusion-dft-spark-flight", conf=config.execution.settings)
-    if args.register:
-        register_views(spark, args.register)
-    refresh_information_schema(spark)
+    spark = app_session(
+        config, "datafusion-dft-spark-flight", register=args.register, run_ddl=True
+    )
     server = DftFlightServer(spark, f"grpc://{args.host}:{args.port}", config)
     print(f"FlightSQL server listening on grpc://{args.host}:{server.port}")
-    from .metrics import split_addr, start_metrics_server
-
-    maddr = (
-        (args.host, args.metrics_port)
-        if args.metrics_port is not None
-        else split_addr(config.flightsql.server_metrics_addr)
+    start_metrics_listener(
+        server.render_metrics, args.host, args.metrics_port,
+        config.flightsql.server_metrics_addr,
     )
-    if maddr:
-        msrv = start_metrics_server(server.render_metrics, maddr[0], maddr[1])
-        print(f"metrics on http://{maddr[0]}:{msrv.server_address[1]}/metrics")
     server.serve()
     return 0
 

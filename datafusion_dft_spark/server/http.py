@@ -27,16 +27,15 @@ from __future__ import annotations
 
 import base64
 import datetime as dt
-import hmac
 import json
 import re
 import time
 
 from flask import Flask, Response, jsonify, request
 
-from ..config import AppConfig, grpc_location as _grpc_location
+from ..config import AppConfig, credentials_ok, grpc_location as _grpc_location
 from ..observability import Observability
-from ..sql import prepare_statement, split_statements
+from ..sql import execute_sql, split_statements
 from .metrics import Metrics
 
 
@@ -53,6 +52,14 @@ def _json_conv(v):
     if isinstance(v, (list, tuple)):
         return [_json_conv(x) for x in v]
     return v
+
+
+def _int_field(body: dict, key: str, default: int) -> int:
+    raw = body.get(key, default)
+    try:
+        return int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"'{key}' must be an integer, got {raw!r}") from None
 
 
 def _df_to_json_rows(df, limit: int) -> list[dict]:
@@ -183,30 +190,11 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
     obs = Observability(spark, persist_path=config.db_path)
     metrics = Metrics("requests_total", "requests_failed", "rows_returned_total")
 
-    def _ct_eq(a: str, b: str) -> bool:
-        # Constant-time compare: '==' short-circuits on the first differing
-        # byte, leaking credential prefixes through response timing.
-        return hmac.compare_digest(a.encode(), b.encode())
-
-    def check_auth() -> bool:
-        h = config.http
-        if not h.basic_auth and not h.bearer_token:
-            return True
-        auth = request.headers.get("Authorization", "")
-        if h.bearer_token and auth.startswith("Bearer ") and _ct_eq(auth[7:], h.bearer_token):
-            return True
-        if h.basic_auth and auth.startswith("Basic "):
-            try:
-                if _ct_eq(base64.b64decode(auth[6:]).decode(), h.basic_auth):
-                    return True
-            except Exception:
-                return False
-        return False
-
     def guarded(path: str, sql: str | None, fn):
         metrics.inc("requests_total")
         t0 = time.perf_counter()
-        if not check_auth():
+        auth = request.headers.get("Authorization", "")
+        if not credentials_ok(auth, config.http.basic_auth, config.http.bearer_token):
             metrics.inc("requests_failed")
             obs.record(path, sql, 0, None, 401)
             return jsonify({"error": "unauthorized"}), 401
@@ -274,22 +262,18 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
         if not isinstance(body, dict) or not str(body.get("sql", "")).strip():
             return jsonify({"error": "body must be JSON with a non-empty 'sql' field"}), 400
         sql = body["sql"]
-        limit_raw = body.get("limit", config.http.result_limit)
-        offset_raw = body.get("offset", 0)
-        if bool(body.get("flightsql")):
+        routed = bool(body.get("flightsql"))
+        if routed:
             gate = _flightsql_unavailable()
             if gate is not None:
                 return gate
 
-            def run_flight():
-                try:
-                    limit = int(limit_raw)
-                except (TypeError, ValueError):
-                    raise ValueError(f"'limit' must be an integer, got {limit_raw!r}")
-                try:
-                    offset = int(offset_raw)
-                except (TypeError, ValueError):
-                    raise ValueError(f"'offset' must be an integer, got {offset_raw!r}")
+        def run():
+            # Parsed inside guarded(): a bad limit or offset must surface
+            # as a 400 with metrics + observability recorded, not a 500.
+            limit = _int_field(body, "limit", config.http.result_limit)
+            offset = _int_field(body, "offset", 0)
+            if routed:
                 rows, schema = _flight_exec(
                     config.flightsql_client,
                     sql,
@@ -298,25 +282,10 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
                     timeout=config.http.timeout_seconds,
                 )
                 return {"rows": rows, "schema": schema}, len(rows)
-
-            return guarded("/sql", sql, run_flight)
-
-        def run():
-            # Parsed inside guarded(): a bad limit must surface as a 400
-            # with metrics + observability recorded, not an unhandled 500.
-            try:
-                limit = int(limit_raw)
-            except (TypeError, ValueError):
-                raise ValueError(f"'limit' must be an integer, got {limit_raw!r}")
-            try:
-                offset = int(offset_raw)
-            except (TypeError, ValueError):
-                raise ValueError(f"'offset' must be an integer, got {offset_raw!r}")
-            df = None
-            for stmt in split_statements(sql):
-                df = spark.sql(prepare_statement(spark, stmt))
-            if df is None:
+            dfs = execute_sql(spark, sql)
+            if not dfs:
                 return {"rows": [], "schema": []}, 0
+            df = dfs[-1]
             if offset > 0:
                 # Pagination analog of the TUI's batch slicing: the plan's
                 # GlobalLimit absorbs offset+limit, so a page deep into an
@@ -458,9 +427,9 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
 def main(argv: list[str] | None = None) -> int:
     import argparse
 
-    from ..catalog import register_views
     from ..config import load_config
-    from ..session import get_spark
+    from ..session import app_session
+    from .metrics import start_metrics_listener
 
     p = argparse.ArgumentParser(prog="datafusion-dft-spark-server")
     p.add_argument("--host", default="127.0.0.1")
@@ -475,32 +444,13 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     config = load_config(args.config, app="http_server") if args.config else AppConfig()
-    spark = get_spark(app_name="datafusion-dft-spark-http", conf=config.execution.settings)
-    if config.udfs:
-        from ..functions.udf_registry import register_udfs
-
-        register_udfs(spark, config.udfs)
-    if config.execution.object_store:
-        from ..sources.object_store import register_object_stores
-
-        register_object_stores(spark, config.execution.object_store)
-    if config.execution.ddl_path:
-        from ..sql import execute_ddl_file
-
-        execute_ddl_file(spark, config.execution.ddl_path)
-    if args.register:
-        register_views(spark, args.register)
-    app = create_app(spark, config, sf_dir=args.register)
-    from .metrics import split_addr, start_metrics_server
-
-    maddr = (
-        (args.host, args.metrics_port)
-        if args.metrics_port is not None
-        else split_addr(config.http.server_metrics_addr)
+    spark = app_session(
+        config, "datafusion-dft-spark-http", register=args.register, run_ddl=True
     )
-    if maddr:
-        msrv = start_metrics_server(app.dft_render_metrics, maddr[0], maddr[1])
-        print(f"metrics on http://{maddr[0]}:{msrv.server_address[1]}/metrics")
+    app = create_app(spark, config, sf_dir=args.register)
+    start_metrics_listener(
+        app.dft_render_metrics, args.host, args.metrics_port, config.http.server_metrics_addr
+    )
     app.run(host=args.host, port=args.port, threaded=True)
     return 0
 

@@ -123,3 +123,18 @@ def start_metrics_server(render: Callable[[], str], host: str, port: int):
     )
     thread.start()
     return server
+
+
+def start_metrics_listener(
+    render: Callable[[], str], host: str, port: int | None, config_addr: str | None
+):
+    """The servers' listener rule: a ``--metrics-port`` flag (bound on
+    the data-plane ``host``) wins over the config's
+    ``server_metrics_addr``; with neither, no listener. Returns the
+    started server or None."""
+    addr = (host, port) if port is not None else split_addr(config_addr)
+    if addr is None:
+        return None
+    server = start_metrics_server(render, *addr)
+    print(f"metrics on http://{addr[0]}:{server.server_address[1]}/metrics")
+    return server

@@ -10,9 +10,12 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import Mapping
+from typing import TYPE_CHECKING, Mapping
 
 from pyspark.sql import SparkSession
+
+if TYPE_CHECKING:
+    from .config import AppConfig
 
 _LOG = logging.getLogger(__name__)
 _WARNED_NO_RDD_PROBE = False
@@ -98,6 +101,40 @@ def get_spark(
     from .functions.compat import register_compat_functions
 
     register_compat_functions(spark)
+    return spark
+
+
+def app_session(
+    config: AppConfig,
+    app_name: str,
+    *,
+    master: str | None = None,
+    register: str | None = None,
+    run_ddl: bool,
+) -> SparkSession:
+    """The one session bootstrap of the CLI, REPL, HTTP and FlightSQL
+    frontends (reference: the ``ExecutionContext`` builder,
+    extensions/builder.rs:99-103). In order: engine settings, the
+    ``[[udf]]`` blocks, ``[execution.object_store]``, the config
+    ``ddl_path`` when ``run_ddl``, then the corpus views under
+    ``register``.
+
+    ``get_spark`` and ``catalog.register_views`` are resolved when this
+    runs, so a wrapper installed on either module sees the call.
+    """
+    from . import catalog
+    from .functions.udf_registry import register_udfs
+    from .sources.object_store import register_object_stores
+    from .sql import execute_ddl_file
+
+    spark = get_spark(master, app_name, conf=config.execution.settings)
+    register_udfs(spark, config.udfs)
+    if config.execution.object_store:
+        register_object_stores(spark, config.execution.object_store)
+    if run_ddl and config.execution.ddl_path:
+        execute_ddl_file(spark, config.execution.ddl_path)
+    if register:
+        catalog.register_views(spark, register)
     return spark
 
 

@@ -619,14 +619,16 @@ def prepare_statement(spark: SparkSession, stmt: str) -> str:
 
 
 def execute_sql(spark: SparkSession, sql: str) -> list[DataFrame]:
-    """Run a (possibly multi-statement) script; one DataFrame per statement."""
+    """Run a (possibly multi-statement) script; one DataFrame per statement.
+
+    The statement runner every frontend shares (reference:
+    ``execute_sql_with_opts``, src/execution.rs:67-82). Statements run in
+    order, so DDL in one is visible to the next.
+    """
     return [spark.sql(prepare_statement(spark, s)) for s in split_statements(sql)]
 
 
 def execute_ddl_file(spark: SparkSession, path: str) -> int:
     """Startup-DDL bootstrap (reference: execution.ddl config + local.rs:336-363)."""
     with open(path) as f:
-        stmts = split_statements(f.read())
-    for s in stmts:
-        spark.sql(prepare_statement(spark, s))
-    return len(stmts)
+        return len(execute_sql(spark, f.read()))

@@ -119,12 +119,13 @@ def test_http_bad_limit_is_400(spark, sf_dir):
     from datafusion_dft_spark.server.http import create_app
 
     c = create_app(spark, AppConfig(), sf_dir=sf_dir).test_client()
-    r = c.post("/sql", json={"sql": "SELECT 1 AS one", "limit": "not-a-number"})
-    assert r.status_code == 400
-    assert "limit" in r.get_json()["error"]
-    # metrics must have recorded the failure (not bypassed via a 500)
+    for key in ("limit", "offset"):
+        r = c.post("/sql", json={"sql": "SELECT 1 AS one", key: "not-a-number"})
+        assert r.status_code == 400
+        assert key in r.get_json()["error"]
+    # metrics must have recorded the failures (not bypassed via a 500)
     text = c.get("/metrics").get_data(as_text=True)
-    assert "dft_spark_requests_failed 1" in text
+    assert "dft_spark_requests_failed 2" in text
 
 
 def test_http_auth_constant_time_compare(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Generator determinism + generated-data usability; concurrent bench."""
+"""Generator determinism + generated-data usability; bench harness modes."""
 
 from __future__ import annotations
 
@@ -61,14 +61,33 @@ def test_generated_data_runs_q1_shape(spark, tmp_path):
     assert {r.l_returnflag for r in out} == {"A", "N", "R"}
 
 
-def test_concurrent_bench(spark, sf_dir):
+def test_concurrent_bench(spark, sf_dir, monkeypatch):
     from datafusion_dft_spark.catalog import register_views
     from datafusion_dft_spark.plans.bench import run_bench_concurrent
 
     register_views(spark, sf_dir)
+    # sized by the session's usable cores, not the host's cpu_count
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     res = run_bench_concurrent(spark, "SELECT count(*) FROM orders", iterations=4)
     assert res.rows_consistent and len(res.phase_times["total"]) == 4
-    assert res.concurrency_mode.startswith("concurrent[")
+    assert res.concurrency_mode == "concurrent[2]"
+
+
+def test_analyze_executes_the_whole_plan(spark):
+    """--analyze times the full plan: a select-list Python UDF runs
+    once per row (a timed count() would prune it and run it 0 times)."""
+    from datafusion_dft_spark.plans.bench import analyze
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        calls.add(1)
+        return x
+
+    spark.udf.register("analyze_bump", bump, "long")
+    info = analyze(spark, "SELECT analyze_bump(id) AS b FROM range(10)")
+    assert info["rows"] == 10
+    assert calls.value == 10
 
 
 def test_rehearsal_generator_schema_parity(spark, sf_dir, tmp_path):
