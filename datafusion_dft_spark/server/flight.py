@@ -9,7 +9,8 @@ Reference: src/server/flightsql/service.rs —
   looks the plan up and streams Arrow record batches
   (service.rs:87-126). Here the "analyzed logical plan" is the
   unexecuted Spark ``DataFrame`` (Catalyst analyzes eagerly; execution
-  is deferred until ``do_get`` collects to Arrow).
+  is deferred until ``do_get``, which runs the plan afresh and forwards
+  the engine's own Arrow batches, ``arrow_batches``).
 - **Prepared statements**: ``do_action(create_prepared_statement)``
   plans once and returns a handle + IPC-serialized dataset schema;
   ``get_flight_info``/``do_get`` on the handle re-use the stored plan;
@@ -40,7 +41,6 @@ prepared-statement lifecycle) is identical in both.
 from __future__ import annotations
 
 import base64
-import datetime as dt
 import json
 import threading
 import time
@@ -376,20 +376,17 @@ class DftFlightServer(fl.FlightServerBase):
     def do_get(self, context, ticket):
         """service.rs:87-126 — look up the stored plan, execute, stream IPC.
 
-        Streams record batches INCREMENTALLY and ARROW-NATIVELY: each
-        executor serializes its output as Arrow IPC inside
-        ``mapInArrow`` (one binary blob per engine batch), and the
-        driver's ``toLocalIterator`` forwards those blobs one partition
-        at a time without ever touching Python rows — the analog of the
-        reference forwarding the engine's record-batch stream untouched
-        (service.rs:87-126). Driver memory stays bounded by (partition
-        size + one in-flight batch), so a ``SELECT *`` over a 100 TB
-        table cannot OOM the server, and per-row Python conversion cost
-        is gone (measured ~6x per-row on 1M-row results; more on wide
-        rows). Types ``mapInArrow`` cannot carry (UDTs) fall back to the
-        old row loop with explicit UTC normalization. An optional
-        ``result_limit`` (mirroring the HTTP server's) is pushed into
-        the plan as a GlobalLimit.
+        The plan runs as a fresh execution each time (execute-per-run)
+        and its result streams as the engine's own Arrow batches
+        (``arrow_batches``), one partition at a time — the analog of the
+        reference forwarding the engine's record-batch stream untouched.
+        Each batch is cast to the wire schema when its types differ and
+        cut into ``stream_batch_rows`` slices. An optional
+        ``result_limit`` (mirroring the HTTP server's) is pushed into the
+        plan as a GlobalLimit. The ``requests`` row carries the rows
+        sent and status 0, 13 when execution fails mid-stream, or 1
+        (gRPC CANCELLED) when the client abandons the stream; either way
+        the engine stops serving the result.
         """
         self.metrics.inc("requests_total")
         start = time.perf_counter()
@@ -421,29 +418,28 @@ class DftFlightServer(fl.FlightServerBase):
         def batches():
             n = 0
             status = 0
+            stream = arrow_batches(df)
             try:
-                for batch in self._stream_result(df, schema, batch_rows):
-                    n += batch.num_rows
-                    yield batch
+                for batch in stream:
+                    if batch.schema != schema:
+                        batch = batch.cast(schema)
+                    for off in range(0, batch.num_rows, batch_rows):
+                        piece = batch.slice(off, batch_rows)
+                        n += piece.num_rows
+                        yield piece
+            except GeneratorExit:
+                status = 1  # the client went away before the end
+                raise
             except Exception as e:
-                # mid-stream failure (Spark task error, client reset):
-                # record it as such instead of a success with a partial
-                # row count
+                # mid-stream failure (Spark task error): record it as
+                # such instead of a success with a partial row count
                 status = 13
                 raise self._failure(e, "query execution failed") from e
             finally:
+                stream.close()
                 self._record(start, request_id, "/do_get_statement", None, status, rows=n)
 
         return fl.GeneratorStream(schema, batches())
-
-    def _stream_result(self, df, schema: pa.Schema, batch_rows: int):
-        """Yield the result as Arrow batches, engine-side conversion first."""
-        try:
-            yield from _arrow_ipc_stream(df, schema, batch_rows)
-            return
-        except _ArrowStreamUnsupported:
-            pass
-        yield from _row_loop_stream(df, schema, batch_rows)
 
     def do_put(self, context, descriptor, reader, writer):
         """DoPut (CommandStatementUpdate / prepared-statement parameter
@@ -537,96 +533,53 @@ def _q(s: str) -> str:
     return str(s).replace("'", "''")
 
 
-class _ArrowStreamUnsupported(Exception):
-    """The plan's schema cannot ride mapInArrow — use the row fallback."""
+def _fresh_execution(df):
+    """A new QueryExecution of ``df``'s plan, so every delivery runs every
+    stage: reusing ``df``'s own would let a prepared statement's second
+    fetch skip its scan stage and serve shuffle output from before the
+    files changed. The plan taken is ``commandExecuted``, not
+    ``logical``: a command (INSERT, CREATE ...) already ran when the
+    statement was planned and is held there as its result rows, so it
+    is not run again."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df._jdf.sparkSession(), df._jdf.queryExecution().commandExecuted()
+    )
+    return DataFrame(jdf, spark)
 
 
-def _arrow_ipc_stream(df, schema: pa.Schema, batch_rows: int):
-    """Stream a DataFrame as Arrow batches with zero driver-side row work.
+def arrow_batches(df):
+    """Yield ``df``'s result as Spark's own Arrow batches, in order.
 
-    Executors serialize each engine Arrow batch to IPC bytes inside
-    ``mapInArrow`` (a pass-through: no computation, just the writer);
-    the driver iterates the resulting one-column binary relation with
-    ``toLocalIterator(prefetchPartitions=True)`` — one tiny Python row
-    per ~10k-row batch — and re-opens the IPC stream. Partitioning is
-    left exactly as the plan produced it: ``toLocalIterator`` runs one
-    job per partition with one prefetched ahead, so driver memory is
-    bounded by two partitions of serialized batches regardless of
-    result size. Session timezone is UTC and Spark stamps its Arrow
-    timestamps with it, so batch schemas match ``to_arrow_schema``
-    byte-for-byte (asserted per batch; a mismatch falls back rather
-    than corrupting the stream).
+    The engine encodes each partition as Arrow record batches
+    (``toArrowBatchRdd``, what ``toArrow()`` collects), and
+    ``toLocalIteratorAndServe`` hands them over one partition at a time
+    with the next one computed ahead: no Python stage, no Python rows,
+    and driver memory bounded by two partitions whatever the result
+    size. The schema is built the way ``toArrow()`` builds it, so the
+    batches are the ones ``toArrow()`` would return. Closing the
+    generator tells the engine to stop serving.
     """
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _local_iterator_from_socket
 
-    def ser(it):
-        for b in it:
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, b.schema) as w:
-                w.write_batch(b)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([sink.getvalue().to_pybytes()], type=pa.binary())], ["ipc"]
-            )
-
+    spark = df.sparkSession
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
+    rdd = _fresh_execution(df)._jdf.toArrowBatchRdd()
+    sock = spark._jvm.PythonRDD.toLocalIteratorAndServe(rdd, True)
+    blobs = _local_iterator_from_socket(sock, NoOpSerializer())
     try:
-        blobs = df.mapInArrow(ser, "ipc binary")
-        it = blobs.toLocalIterator(prefetchPartitions=True)
-        first = next(it, None)
-    except Exception as e:
-        # Only Arrow-conversion capability gaps (UDTs etc.) may fall
-        # back — a genuine execution error must propagate, or the row
-        # path would re-execute the failing query just to fail again.
-        msg = str(e)
-        if "UNSUPPORTED" in msg.upper() or "not supported" in msg:
-            raise _ArrowStreamUnsupported(msg) from e
-        raise
-
-    def gen(row):
-        for b in pa.ipc.open_stream(row[0]):
-            if b.schema != schema:
-                b = b.cast(schema)
-            if b.num_rows <= batch_rows:
-                yield b
-            else:
-                for off in range(0, b.num_rows, batch_rows):
-                    yield b.slice(off, min(batch_rows, b.num_rows - off))
-
-    if first is not None:
-        yield from gen(first)
-    for row in it:
-        yield from gen(row)
-
-
-def _row_loop_stream(df, schema: pa.Schema, batch_rows: int):
-    """Row-at-a-time fallback for plans mapInArrow cannot carry.
-
-    PySpark's non-Arrow collection yields NAIVE datetimes rendered in
-    the driver process's OS timezone; pyarrow would interpret them as
-    UTC when the schema field is tz-aware, silently shifting values on
-    any non-UTC host. ``datetime.astimezone(utc)`` on a naive value
-    applies the OS-local offset first, restoring the correct instant.
-    TIMESTAMP_NTZ fields stay naive (their Arrow field carries no tz).
-    """
-    tz_fields = [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.tz is not None
-    ]
-
-    def fix(d: dict) -> dict:
-        for name in tz_fields:
-            v = d.get(name)
-            if isinstance(v, dt.datetime) and v.tzinfo is None:
-                d[name] = v.astimezone(dt.timezone.utc)
-        return d
-
-    buf: list[dict] = []
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        buf.append(fix(row.asDict(recursive=True)))
-        if len(buf) >= batch_rows:
-            yield pa.RecordBatch.from_pylist(buf, schema=schema)
-            buf = []
-    if buf:
-        yield pa.RecordBatch.from_pylist(buf, schema=schema)
+        for blob in blobs:
+            yield pa.ipc.read_record_batch(pa.py_buffer(blob), schema)
+    finally:
+        blobs.close()
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -69,6 +69,43 @@ def _df_to_json_rows(df, limit: int) -> list[dict]:
     ]
 
 
+def _catalog_tables(rows: list[dict], catalog: str | None) -> list[dict]:
+    """``SHOW TABLES`` rows in the documented ``/catalog`` shape, for
+    both routings, so the ``flightsql`` flag changes execution and not
+    the API contract (router.rs:119-138). Column names differ per
+    backend (Spark: namespace/tableName/isTemporary; DataFusion and
+    standard: table_catalog/table_schema/table_name/table_type), so
+    both are probed; a row shape with neither passes through raw.
+    ``type`` is TABLE or TEMPORARY (a DataFusion backend says
+    'BASE TABLE'/'VIEW'). A temporary view has no catalog; other tables
+    take the row's catalog, else ``catalog``."""
+
+    def pick(r, *keys):
+        for k in keys:
+            if r.get(k):  # '' (Spark's empty namespace) == absent
+                return r[k]
+        return None
+
+    tables = []
+    for r in rows:
+        name = pick(r, "tableName", "table_name", "name")
+        if name is None:
+            return rows
+        raw_type = pick(r, "table_type", "type") or (
+            "TEMPORARY" if r.get("isTemporary") else "TABLE"
+        )
+        temporary = "TEMP" in raw_type.upper()
+        tables.append(
+            {
+                "catalog": None if temporary else (pick(r, "table_catalog", "catalog") or catalog),
+                "database": pick(r, "namespace", "table_schema", "database"),
+                "name": name,
+                "type": "TEMPORARY" if temporary else "TABLE",
+            }
+        )
+    return tables
+
+
 def _drain_flight(reader, need: int | None):
     """Buffer Flight stream batches until ``need`` rows arrive (None =
     all), then cancel the remainder of the stream. Keeps HTTP-server
@@ -301,60 +338,25 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
 
     @app.get("/catalog")
     def get_catalog():
-        if _wants_flightsql_param():
+        routed = _wants_flightsql_param()
+        if routed:
             gate = _flightsql_unavailable()
             if gate is not None:
                 return gate
 
-            def run_flight():
+        def run():
+            if routed:
                 rows, _ = _flight_exec(
                     config.flightsql_client,
                     "SHOW TABLES",
                     None,
                     timeout=config.http.timeout_seconds,
                 )
-                # normalize SHOW TABLES rows into the documented /catalog
-                # shape so the routing flag changes execution, not the
-                # API contract. Column names differ per backend (Spark:
-                # namespace/tableName/isTemporary; DataFusion/standard:
-                # table_catalog/table_schema/table_name/table_type) —
-                # probe both before falling back to a raw passthrough.
-                def pick(r, *keys):
-                    for k in keys:
-                        if r.get(k):  # '' (Spark's empty namespace) == absent
-                            return r[k]
-                    return None
-
-                tables = []
-                for r in rows:
-                    name = pick(r, "tableName", "table_name", "name")
-                    if name is None:
-                        # unknown shape: raw passthrough beats nulls
-                        return {"tables": rows}, len(rows)
-                    # collapse to the documented TABLE/TEMPORARY vocabulary
-                    # (the local path derives it from isTemporary; a
-                    # DataFusion backend says 'BASE TABLE'/'VIEW')
-                    raw_type = pick(r, "table_type", "type") or (
-                        "TEMPORARY" if r.get("isTemporary") else "TABLE"
-                    )
-                    ttype = "TEMPORARY" if "TEMP" in raw_type.upper() else "TABLE"
-                    tables.append(
-                        {
-                            "catalog": pick(r, "table_catalog", "catalog"),
-                            "database": pick(r, "namespace", "table_schema", "database"),
-                            "name": name,
-                            "type": ttype,
-                        }
-                    )
-                return {"tables": tables}, len(tables)
-
-            return guarded("/catalog", "SHOW TABLES", run_flight)
-
-        def run():
-            tables = [
-                {"catalog": t.catalog, "database": (t.namespace[0] if t.namespace else None), "name": t.name, "type": t.tableType}
-                for t in spark.catalog.listTables()
-            ]
+                catalog = None
+            else:
+                rows = [r.asDict() for r in spark.sql("SHOW TABLES").collect()]
+                catalog = spark.catalog.currentCatalog()
+            tables = _catalog_tables(rows, catalog)
             return {"tables": tables}, len(tables)
 
         return guarded("/catalog", "SHOW TABLES", run)

@@ -85,6 +85,52 @@ def test_catalog_and_table(client):
     assert len(r.get_json()["rows"]) == 5
 
 
+def test_catalog_is_one_show_tables_for_both_routings(spark, monkeypatch, tmp_path):
+    """/catalog is SHOW TABLES on both routings, and the local and the
+    flightsql-routed answer agree on name, database and type for a
+    temporary view and a persistent table. The local route no longer
+    needs ``Catalog.listTables`` (one metadata lookup per table)."""
+    from pyspark.sql.catalog import Catalog
+
+    from datafusion_dft_spark.server.flight import DftFlightServer
+
+    spark.sql("DROP TABLE IF EXISTS catalog_probe_table")
+    spark.sql(
+        f"CREATE TABLE catalog_probe_table (a INT) USING parquet LOCATION '{tmp_path}/t'"
+    )
+    spark.range(1).createOrReplaceTempView("catalog_probe_view")
+    fs = DftFlightServer(spark, "grpc://127.0.0.1:0")
+    try:
+        cfg = parse_config({"flightsql": {"connection_url": f"http://127.0.0.1:{fs.port}"}})
+        c = create_app(spark, cfg).test_client()
+
+        def listing(url):
+            r = c.get(url)
+            assert r.status_code == 200, r.get_json()
+            return {t["name"]: t for t in r.get_json()["tables"]}
+
+        routed = listing("/catalog?flightsql=true")
+
+        def boom(*a, **kw):
+            raise AssertionError("listTables called")
+
+        monkeypatch.setattr(Catalog, "listTables", boom)
+        local = listing("/catalog")
+
+        def key(t):
+            return (t["name"], t["database"], t["type"])
+
+        assert sorted(map(key, local.values())) == sorted(map(key, routed.values()))
+        assert key(local["catalog_probe_view"]) == ("catalog_probe_view", None, "TEMPORARY")
+        assert key(local["catalog_probe_table"]) == ("catalog_probe_table", "default", "TABLE")
+        assert local["catalog_probe_view"]["catalog"] is None
+        assert local["catalog_probe_table"]["catalog"] == spark.catalog.currentCatalog()
+    finally:
+        fs.shutdown()
+        spark.sql("DROP TABLE IF EXISTS catalog_probe_table")
+        spark.catalog.dropTempView("catalog_probe_view")
+
+
 def test_tpch_endpoint(client):
     r = client.get("/tpch/1")
     body = r.get_json()
