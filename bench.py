@@ -11,8 +11,7 @@ Methodology (round-3 overhead work):
 - **Arrow materialization** (round 6; collect() in rounds 3-5) — every
   result fully materializes to the driver as Arrow batches
   (``df.toArrow()``, the same engine-native delivery path the
-  FlightSQL server streams), falling back to ``collect()`` for plans
-  Arrow can't carry. Like collect(), this is immune to the
+  FlightSQL server streams). Like collect(), this is immune to the
   count()-pruning hazard the earlier noop sink guarded against; unlike
   collect(), it doesn't bill per-row Python ``Row`` construction to
   the query — the DuckDB proxy's ``fetchall()`` materializes at the C
@@ -49,44 +48,12 @@ import pandas as pd  # noqa: F401  (module-level: pandas_udf hints resolve here)
 
 
 def make_materializer(name: str, df):
-    """Pick the result-materialization method ONCE per plan.
-
-    The cold run probes ``df.toArrow()`` (the engine-native delivery
-    path); only if the plan's schema can't ride Arrow does the query
-    fall back to ``collect()`` for every run — noted on stderr so the
-    fallback is visible. Steady-state samples never catch: a genuine
-    execution error surfaces instead of silently double-executing the
-    query inside a timed window.
-    """
-    try:
-        df.toArrow()
-        return df.toArrow
-    except Exception as e:
-        # Only Arrow-CAPABILITY gaps (schema types Arrow collection can't
-        # carry) may fall back; a genuine execution failure must propagate
-        # to the per-query handler — otherwise a query that
-        # deterministically fails under Arrow gets billed a cold time
-        # containing one full failed execution, and a real engine error
-        # masquerades as "arrow unavailable".
-        from pyspark.errors import (
-            PySparkNotImplementedError,
-            PySparkTypeError,
-            PySparkValueError,
-        )
-
-        msg = str(e).lower()
-        capability_gap = isinstance(
-            e, (PySparkNotImplementedError, PySparkTypeError, PySparkValueError)
-        ) or ("arrow" in msg and ("unsupported" in msg or "not supported" in msg))
-        if not capability_gap:
-            raise
-        print(
-            f"bench: {name}: arrow materialization unavailable "
-            f"({type(e).__name__}); timing collect()",
-            file=sys.stderr,
-        )
-        df.collect()
-        return df.collect
+    """Materialize ``df`` once through ``df.toArrow()`` (the cold run)
+    and return that method for the timed runs. Every type the registry
+    produces rides Arrow, so there is no other path: an error raises
+    and the per-query handler records it."""
+    df.toArrow()
+    return df.toArrow
 
 
 def main() -> int:

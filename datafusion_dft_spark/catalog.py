@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import AppContext
+
 # The driver's synthetic corpus (TESTDATA.md): TPC-H-ish star schema
 # plus events / documents / embeddings for the pipeline operators.
 TABLES: tuple[str, ...] = (
@@ -41,19 +43,6 @@ _EXT_FORMAT = {
     ".ndjson": "json",
     ".jsonl": "json",
 }
-
-# (catalog, schema) -> registering root, from register_db. The
-# reference exposes a THREE-level namespace (``dft.tpch.part``,
-# src/db.rs:54-150); Spark's session catalog is two-level, so
-# register_db flattens the catalog level away and records the pair here
-# so the SQL frontend can strip known ``catalog.`` prefixes from query
-# text (sql.py ``_rewrite_catalog_prefixes``) — the reference's own
-# embedded TPC-H texts (src/server/http/tpch.rs) then run unchanged.
-# Keyed by root so re-registering a root REPLACES its pairs instead of
-# accreting stale ones forever (a server re-pointed at a new database
-# must stop rewriting prefixes the old one defined). Iterating yields
-# the (catalog, schema) keys, so consumers treat it as a set of pairs.
-REGISTERED_CATALOG_SCHEMAS: dict[tuple[str, str], str] = {}
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -121,20 +110,15 @@ class Tables(Mapping):
         return sum(1 for _ in self)
 
 
-# One Tables map per (session, dir): repeated query builds reuse the
-# already-analyzed DataFrames instead of re-listing files and re-reading
-# parquet footers on every call (~50-100ms per table otherwise).
-_TABLES_CACHE: dict[tuple[int, str], Tables] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
-    """Lazy (and session-cached) map over the corpus tables under ``sf_dir``."""
-    key = (id(spark), sf_dir)
-    cached = _TABLES_CACHE.get(key)
-    if cached is None or cached._spark is not spark:
-        cached = Tables(spark, sf_dir)
-        _TABLES_CACHE[key] = cached
-    return cached
+    """Lazy map over the corpus tables under ``sf_dir``, one per session
+    and directory: repeated query builds reuse the already-analyzed
+    DataFrames instead of re-listing files and re-reading parquet
+    footers on every call (~50-100ms per table otherwise)."""
+    tables = AppContext.of(spark).tables
+    if sf_dir not in tables:
+        tables.setdefault(sf_dir, Tables(spark, sf_dir))
+    return tables[sf_dir]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> Tables:
@@ -170,19 +154,23 @@ def register_db(spark: SparkSession, root: str) -> list[str]:
     Returns the list of fully qualified names registered.
 
     Reference parity: src/db.rs:54-150 (three-level catalog from
-    directory layout, format sniffed per table dir).
+    directory layout, format sniffed per table dir). Each (catalog,
+    schema) pair is recorded on the session's ``AppContext``, keyed by
+    root so a re-scan replaces them, for sql.py
+    ``_rewrite_catalog_prefixes``.
     """
     rootp = Path(root)
     registered: list[str] = []
     if not rootp.is_dir():
         return registered
     canon = str(rootp.resolve())
-    for pair in [p for p, r in REGISTERED_CATALOG_SCHEMAS.items() if r == canon]:
-        del REGISTERED_CATALOG_SCHEMAS[pair]  # re-scan replaces, never accretes
+    pairs = AppContext.of(spark).catalog_schemas
+    for pair in [p for p, r in pairs.items() if r == canon]:
+        del pairs[pair]
     for catalog_dir in sorted(p for p in rootp.iterdir() if p.is_dir()):
         for schema_dir in sorted(p for p in catalog_dir.iterdir() if p.is_dir()):
             schema = schema_dir.name
-            REGISTERED_CATALOG_SCHEMAS[(catalog_dir.name, schema)] = canon
+            pairs[(catalog_dir.name, schema)] = canon
             for table_dir in sorted(p for p in schema_dir.iterdir() if p.is_dir()):
                 fmt = sniff_format(table_dir)
                 if fmt is None:

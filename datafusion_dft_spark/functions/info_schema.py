@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..session import AppContext
+from .udf_registry import ALLOWED_TYPES
+
 _TABLES_SCHEMA = T.StructType(
     [
         T.StructField("table_catalog", T.StringType()),
@@ -104,30 +107,23 @@ def _function_type(name: str, class_name: str) -> str:
     return "SCALAR"
 
 
-# Sessions whose routines/parameters views are current. listFunctions()
-# walks ~400 builtins through py4j (~2 s); the builtin set is static per
-# session and the only function-registration path this engine exposes is
-# udf_registry.register_udf, which invalidates below.
-_ROUTINES_FRESH: set[int] = set()
-
-
-def invalidate_routines(spark: SparkSession) -> None:
-    _ROUTINES_FRESH.discard(id(spark))
-
-
 def _refresh_routines(spark: SparkSession, catalog: str) -> None:
     """Build routines + parameters over spark.catalog.listFunctions().
+
+    listFunctions() walks ~400 builtins through py4j (~2 s), so the views
+    are rebuilt only when the session's ``AppContext.routines_fresh`` is
+    cleared: by ``udf_registry.register_udf`` and by CREATE/DROP FUNCTION
+    statements (``sql.prepare_statement``).
 
     Parameter rows exist only for config-registered UDFs: their
     signatures are declared in TOML (the reference's WASM-UDF config),
     while Spark's catalog does not expose builtin JVM signatures — an
     honest gap, documented here rather than fabricated.
     """
-    if id(spark) in _ROUTINES_FRESH:
+    ctx = AppContext.of(spark)
+    if ctx.routines_fresh:
         return
-    from .udf_registry import ALLOWED_TYPES, registered_udfs
-
-    udfs = registered_udfs(spark)
+    udfs = ctx.udfs
     routines = []
     parameters = []
     for fn in spark.catalog.listFunctions():
@@ -167,7 +163,7 @@ def _refresh_routines(spark: SparkSession, catalog: str) -> None:
     spark.createDataFrame(parameters or [], _PARAMETERS_SCHEMA).createOrReplaceTempView(
         "__info_parameters"
     )
-    _ROUTINES_FRESH.add(id(spark))
+    ctx.routines_fresh = True
 
 
 def refresh_information_schema(spark: SparkSession) -> None:

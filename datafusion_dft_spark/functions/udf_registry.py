@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import UdfConfig
+from ..session import AppContext
 
 # The reference's exact supported-type whitelist (native/row.rs:50-77).
 ALLOWED_TYPES: dict[str, T.DataType] = {
@@ -46,19 +47,12 @@ def _resolve(function_path: str) -> Callable:
     return getattr(importlib.import_module(mod), name)
 
 
-# Signatures of config-registered UDFs, keyed by session id — the only
-# functions whose parameter types are knowable (Spark's catalog does not
-# expose builtin JVM signatures). information_schema.routines/parameters
-# read these (reference asserts both views: src/db.rs:195-196).
-_SESSION_UDFS: dict[int, dict[str, UdfConfig]] = {}
-
-
-def registered_udfs(spark: SparkSession) -> dict[str, UdfConfig]:
-    """Config-registered UDF signatures for this session (name -> cfg)."""
-    return dict(_SESSION_UDFS.get(id(spark), {}))
-
-
 def register_udf(spark: SparkSession, cfg: UdfConfig) -> None:
+    """Register one config UDF and record its signature on the session's
+    ``AppContext``: config UDFs are the only functions whose parameter
+    types are knowable (Spark's catalog does not expose builtin JVM
+    signatures), and information_schema.routines/parameters report them
+    (reference asserts both views: src/db.rs:195-196)."""
     for t in [*cfg.input_types, cfg.return_type]:
         if t not in ALLOWED_TYPES:
             raise UdfTypeError(
@@ -73,10 +67,9 @@ def register_udf(spark: SparkSession, cfg: UdfConfig) -> None:
         spark.udf.register(cfg.name, F.pandas_udf(fn, ret))
     else:
         raise ValueError(f"unknown UDF mode {cfg.mode!r} (expected 'row' or 'arrow')")
-    _SESSION_UDFS.setdefault(id(spark), {})[cfg.name] = cfg
-    from .info_schema import invalidate_routines
-
-    invalidate_routines(spark)
+    ctx = AppContext.of(spark)
+    ctx.udfs[cfg.name] = cfg
+    ctx.routines_fresh = False
 
 
 def register_udfs(spark: SparkSession, udfs: list[UdfConfig]) -> list[str]:

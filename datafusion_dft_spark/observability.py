@@ -6,6 +6,11 @@ columns widened per SURVEY.md §7: rows u64→long, status u16→int).
 Backed by the MapTable analog (tables/map_table.rs:46-120): rows key on
 request_id with upsert semantics, re-registering the ``requests`` temp
 view on each insert — the reference's rebuild-on-scan approach.
+
+There is one log per session: ``session.AppContext.requests_log``
+creates it when the first server (HTTP or FlightSQL) is built on the
+session, and every later server records to the same rows, so the
+``requests`` view lists the requests of all of them.
 """
 
 from __future__ import annotations

@@ -22,8 +22,9 @@ Reference: src/server/flightsql/service.rs —
   ``__info_*`` emulation views.
 - **Auth**: basic or bearer validated per request
   (src/server/flightsql/mod.rs:60-105) — here a gRPC server middleware.
-- **Observability**: every RPC records a row in the ``requests``
-  table with request id, path, latency and status
+- **Observability**: every RPC records a row in the session's one
+  ``requests`` log (``AppContext.requests_log``, shared with the HTTP
+  server) with request id, path, latency and status
   (service.rs:127-160).
 
 Wire format: BOTH envelopes are accepted per request. The reference's
@@ -51,7 +52,7 @@ import pyarrow as pa
 import pyarrow.flight as fl
 
 from ..config import AppConfig, credentials_ok
-from ..observability import Observability
+from ..session import AppContext
 from ..sql import contains_copy, execute_sql, split_statements
 from . import flightsql_proto as fsp
 from .metrics import Metrics
@@ -138,7 +139,7 @@ class DftFlightServer(fl.FlightServerBase):
         # initializer binds the port: it starts serving immediately
         self._spark = spark
         self._flight_conf = fa
-        self._obs = Observability(spark, persist_path=config.db_path)
+        self._obs = AppContext.of(spark).requests_log(config.db_path)
         self._lock = threading.Lock()
         self._requests: dict[str, object] = {}  # request_id -> DataFrame (plan)
         self._prepared: dict[str, PreparedStatementHandle] = {}

@@ -10,7 +10,8 @@ Reference: src/server/http/router.rs —
 - ``GET /tpch/{n}`` canned queries (router.rs:180-196) — here they run
   the registry's TPC-H-adapted suite;
 - basic/bearer auth, ``/health``, Prometheus-style ``/metrics``, and a
-  per-request insert into the observability ``requests`` table;
+  per-request insert into the session's one ``requests`` log
+  (``AppContext.requests_log``, shared with the FlightSQL server);
 - every endpoint accepts the reference's ``flightsql`` flag (body field
   on POST /sql, query param on the GETs, router.rs:88-172): execution
   routes through the ``[flightsql] connection_url`` client instead of
@@ -34,7 +35,7 @@ import time
 from flask import Flask, Response, jsonify, request
 
 from ..config import AppConfig, credentials_ok, grpc_location as _grpc_location
-from ..observability import Observability
+from ..session import AppContext
 from ..sql import execute_sql, split_statements
 from .metrics import Metrics
 
@@ -224,7 +225,7 @@ def _flight_exec(
 def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None) -> Flask:
     config = config or AppConfig()
     app = Flask("datafusion_dft_spark")
-    obs = Observability(spark, persist_path=config.db_path)
+    obs = AppContext.of(spark).requests_log(config.db_path)
     metrics = Metrics("requests_total", "requests_failed", "rows_returned_total")
 
     def guarded(path: str, sql: str | None, fn):

@@ -10,12 +10,15 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 from typing import TYPE_CHECKING, Mapping
 
 from pyspark.sql import SparkSession
 
 if TYPE_CHECKING:
-    from .config import AppConfig
+    from .catalog import Tables
+    from .config import AppConfig, UdfConfig
+    from .observability import Observability
 
 _LOG = logging.getLogger(__name__)
 _WARNED_NO_RDD_PROBE = False
@@ -63,6 +66,55 @@ _RUNTIME_CONF: tuple[str, ...] = (
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
+
+
+class AppContext:
+    """The application state of one SparkSession (reference: the
+    ``ExecutionContext`` every frontend shares, src/execution.rs:67-82):
+    the lazy ``catalog.Tables`` per corpus directory, the config-UDF
+    signatures, the ``register_db`` (catalog, schema) -> root pairs,
+    whether information_schema.routines is current, and the one
+    ``requests`` log both servers record to.
+
+    ``AppContext.of(spark)`` is the only lookup. The context is an
+    attribute of the session object, so it lives and dies with it.
+    """
+
+    _ATTR = "_dft_app_context"
+    _LOCK = threading.Lock()
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.tables: dict[str, Tables] = {}
+        self.udfs: dict[str, UdfConfig] = {}
+        self.catalog_schemas: dict[tuple[str, str], str] = {}
+        self.routines_fresh = False
+        self._requests: Observability | None = None
+
+    @classmethod
+    def of(cls, spark: SparkSession) -> AppContext:
+        """This session's context, created on first use: query builders
+        are also called with a bare session (``__spark_entry__``,
+        ``perfbench/sweep.py``)."""
+        ctx = getattr(spark, cls._ATTR, None)
+        if ctx is None:
+            with cls._LOCK:
+                ctx = getattr(spark, cls._ATTR, None)
+                if ctx is None:
+                    ctx = cls(spark)
+                    setattr(spark, cls._ATTR, ctx)
+        return ctx
+
+    def requests_log(self, db_path: str | None) -> Observability:
+        """The session's ``requests`` log, created by the first server
+        built on it (with that server's ``db_path``). Servers call this
+        while they are built, never on a request thread."""
+        with self._LOCK:
+            if self._requests is None:
+                from .observability import Observability
+
+                self._requests = Observability(self.spark, persist_path=db_path)
+            return self._requests
 
 
 def default_parallelism() -> int:

@@ -30,6 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions.compat import _balanced_end, _masked_spans, rewrite_function_names
+from .session import AppContext
 
 _EXT_FMT = {
     ".parquet": "parquet",
@@ -180,21 +181,20 @@ def _rewrite_view_column_aliases(sql: str) -> str:
     return f"{head}{name} AS {sel_head}{', '.join(aliased)} {rest}"
 
 
-def _rewrite_catalog_prefixes(sql: str) -> str:
+def _rewrite_catalog_prefixes(spark: SparkSession, sql: str) -> str:
     """Strip known three-level catalog prefixes down to Spark's two.
 
     The reference resolves ``{catalog}.{schema}.{table}`` from its
     directory database (src/db.rs:54-150); ``register_db`` flattens the
     catalog level into Spark's session catalog and records each
-    (catalog, schema) pair. Here ``dft.tpch.part`` becomes
-    ``tpch.part`` — only for pairs actually registered, only outside
-    string literals/comments/backticks, so an unrelated column or
-    literal named ``dft`` is never touched.
+    (catalog, schema) pair on the session's ``AppContext``. Here
+    ``dft.tpch.part`` becomes ``tpch.part`` — only for pairs actually
+    registered, only outside string literals/comments/backticks, so an
+    unrelated column or literal named ``dft`` is never touched.
     """
-    from .catalog import REGISTERED_CATALOG_SCHEMAS
     from .functions.compat import _in_spans, _masked_spans
 
-    for cat, schema in REGISTERED_CATALOG_SCHEMAS:
+    for cat, schema in list(AppContext.of(spark).catalog_schemas):
         pat = re.compile(
             rf"(?i)\b{re.escape(cat)}\s*\.\s*({re.escape(schema)})\s*\.", re.UNICODE
         )
@@ -600,15 +600,23 @@ def contains_copy(sql: str) -> bool:
     return any(_COPY_RE.match(s) for s in split_statements(sql))
 
 
+# CREATE/DROP FUNCTION changes what information_schema.routines lists.
+_FUNCTION_DDL_RE = re.compile(
+    r"(?is)^\s*(?:CREATE(?:\s+OR\s+REPLACE)?|DROP)\s+(?:TEMP(?:ORARY)?\s+)?FUNCTION\b"
+)
+
+
 def prepare_statement(spark: SparkSession, stmt: str) -> str:
     """Apply all app-level rewrites to one statement."""
+    if _FUNCTION_DDL_RE.match(stmt):
+        AppContext.of(spark).routines_fresh = False
     ext = _rewrite_external_table(spark, stmt)
     if ext is not None:
         return ext
     cp = _rewrite_copy(spark, stmt)
     if cp is not None:
         return cp
-    stmt = _rewrite_catalog_prefixes(stmt)
+    stmt = _rewrite_catalog_prefixes(spark, stmt)
     stmt = _rewrite_view_column_aliases(stmt)
     stmt = _rewrite_url_tables(stmt)
     stmt = _rewrite_json_functions(stmt)

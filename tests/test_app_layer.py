@@ -111,6 +111,24 @@ def test_information_schema_advertises_own_views(spark):
     }
 
 
+def test_function_ddl_refreshes_information_schema_routines(spark):
+    """CREATE/DROP FUNCTION through the statement runner shows up in the
+    next information_schema.routines read."""
+    query = "SELECT routine_name FROM information_schema.routines WHERE routine_name = 'plus1'"
+
+    def listed() -> bool:
+        return bool(execute_sql(spark, query)[-1].collect())
+
+    assert not listed()
+    execute_sql(spark, "CREATE TEMPORARY FUNCTION plus1(x INT) RETURNS INT RETURN x + 1")
+    try:
+        assert execute_sql(spark, "SELECT plus1(1) AS y")[-1].first().y == 2
+        assert listed()
+    finally:
+        execute_sql(spark, "DROP TEMPORARY FUNCTION IF EXISTS plus1")
+    assert not listed()
+
+
 def test_information_schema_routines_and_parameters(spark):
     """src/db.rs:195-196 — routines lists built-ins and registered UDFs;
     parameters carries the declared signature of config-registered UDFs."""

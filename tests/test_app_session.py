@@ -1,12 +1,20 @@
 """One application context for the four frontends.
 
 Every frontend builds its session through ``session.app_session`` and
-every server checks credentials through ``config.credentials_ok``.
+every server checks credentials through ``config.credentials_ok``. The
+per-session state (corpus tables, UDF signatures, catalog pairs, the
+routines flag and the ``requests`` log) lives on ``session.AppContext``.
 """
 
 from __future__ import annotations
 
 import base64
+import json
+import os
+import subprocess
+import sys
+import textwrap
+import threading
 
 import pytest
 
@@ -129,3 +137,117 @@ def _basic(userpass: str) -> str:
 )
 def test_credentials_ok(authorization, basic, bearer, ok):
     assert credentials_ok(authorization, basic, bearer) is ok
+
+
+def test_both_servers_record_to_one_requests_log(spark, sf_dir):
+    """An HTTP app and a FlightSQL server on one session share its one
+    ``requests`` log: each records its request and the view shows both."""
+    import pyarrow.flight as fl
+
+    from datafusion_dft_spark.server.flight import DftFlightServer
+    from datafusion_dft_spark.server.http import create_app
+    from datafusion_dft_spark.session import AppContext
+
+    http_sql, flight_sql = "SELECT 1 AS one_log_http", "SELECT 1 AS one_log_flight"
+    app = create_app(spark, AppConfig(), sf_dir=sf_dir)
+    server = DftFlightServer(spark, "grpc://127.0.0.1:0")
+    try:
+        assert server._obs is AppContext.of(spark).requests_log(None)
+        assert app.test_client().post("/sql", json={"sql": http_sql}).status_code == 200
+        client = fl.FlightClient(f"grpc://127.0.0.1:{server.port}")
+        desc = fl.FlightDescriptor.for_command(
+            json.dumps({"type": "statement", "query": flight_sql}).encode()
+        )
+        info = client.get_flight_info(desc)
+        assert client.do_get(info.endpoints[0].ticket).read_all().num_rows == 1
+        client.close()
+    finally:
+        server.shutdown()
+    rows = spark.sql("SELECT request_id, sql, path FROM requests").collect()
+    assert (http_sql, "/sql") in {(r.sql, r.path) for r in rows}
+    flight_ids = {r.request_id for r in rows if r.sql == flight_sql}
+    assert {r.path for r in rows if r.request_id in flight_ids} == {
+        "/get_flight_info_statement", "/do_get_statement"
+    }
+
+
+def test_a_new_session_starts_with_an_empty_context(tmp_path):
+    """Session A registers a UDF, a directory database and reads
+    information_schema.routines; after ``stop()`` a new session B has
+    none of that state. A subprocess, because the suite's shared
+    session must not be stopped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table_dir = tmp_path / "db" / "dft" / "tpch" / "t1"
+    table_dir.mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1, 2]}), table_dir / "part-0.parquet")
+    script = textwrap.dedent(
+        f"""
+        import json
+        from datafusion_dft_spark.catalog import register_db
+        from datafusion_dft_spark.config import UdfConfig
+        from datafusion_dft_spark.functions.udf_registry import register_udf
+        from datafusion_dft_spark.session import AppContext, get_spark
+        from datafusion_dft_spark.sql import execute_sql, prepare_statement
+
+        conf = {{"spark.driver.memory": "1g", "spark.sql.shuffle.partitions": "1"}}
+        a = get_spark(master="local[1]", conf=conf)
+        register_udf(a, UdfConfig("ctx_add", "row", ["int64", "int64"], "int64",
+                                  "tests.udf_fixtures:add"))
+        register_db(a, {str(tmp_path / "db")!r})
+        execute_sql(a, "SELECT count(*) FROM information_schema.routines")[-1].collect()
+        ctx_a = AppContext.of(a)
+        before = {{
+            "udfs": sorted(ctx_a.udfs), "pairs": sorted(map(list, ctx_a.catalog_schemas)),
+            "fresh": ctx_a.routines_fresh,
+            "rewrite": prepare_statement(a, "SELECT * FROM dft.tpch.t1"),
+        }}
+        a.stop()
+        b = get_spark(master="local[1]", conf=conf)
+        ctx_b = AppContext.of(b)
+        after = {{
+            "same": ctx_b is ctx_a, "udfs": sorted(ctx_b.udfs),
+            "pairs": sorted(map(list, ctx_b.catalog_schemas)), "fresh": ctx_b.routines_fresh,
+            "rewrite": prepare_statement(b, "SELECT * FROM dft.tpch.t1"),
+        }}
+        b.stop()
+        print(json.dumps({{"before": before, "after": after}}))
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]))
+    p = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    assert got["before"] == {
+        "udfs": ["ctx_add"], "pairs": [["dft", "tpch"]], "fresh": True,
+        "rewrite": "SELECT * FROM tpch.t1",
+    }
+    assert got["after"] == {
+        "same": False, "udfs": [], "pairs": [], "fresh": False,
+        "rewrite": "SELECT * FROM dft.tpch.t1",
+    }
+
+
+def test_app_context_is_created_once_under_concurrent_first_use(spark):
+    from datafusion_dft_spark.session import AppContext
+
+    fresh = spark.newSession()
+    barrier = threading.Barrier(8)
+    got = []
+
+    def first_use():
+        barrier.wait()
+        got.append(AppContext.of(fresh))
+
+    threads = [threading.Thread(target=first_use) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(got) == 8 and all(c is got[0] for c in got)
+    assert got[0] is not AppContext.of(spark)

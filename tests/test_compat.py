@@ -123,13 +123,6 @@ def test_compat_functions_visible_in_information_schema(spark):
     """The dialect shim's SQL UDFs surface in information_schema.routines
     like every other registered function (the reference exposes its
     registry via routines, src/db.rs:195-196)."""
-    from datafusion_dft_spark.functions.info_schema import (
-        invalidate_routines,
-        refresh_information_schema,
-    )
-
-    invalidate_routines(spark)
-    refresh_information_schema(spark)
     rows = execute_sql(
         spark,
         "SELECT routine_name, function_type FROM information_schema.routines "

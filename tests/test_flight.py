@@ -502,7 +502,10 @@ def test_do_get_client_cancel_leaves_session_clean(spark, sf_dir):
     server = DftFlightServer(spark, "grpc://127.0.0.1:0", config=cfg)
     try:
         c = fl.FlightClient(f"grpc://127.0.0.1:{server.port}")
-        info = c.get_flight_info(_cmd({"type": "statement", "query": "SELECT * FROM lineitem"}))
+        # far larger than the transport's buffers: a small result can be
+        # written out whole before the cancel arrives, and the server
+        # then rightly records status 0
+        info = c.get_flight_info(_cmd({"type": "statement", "query": "SELECT * FROM range(5000000)"}))
         handle = json.loads(info.endpoints[0].ticket.ticket.decode())["handle"]
         reader = c.do_get(info.endpoints[0].ticket)
         assert reader.read_chunk().data.num_rows == 100
