@@ -14,6 +14,8 @@ from collections.abc import Mapping
 from pathlib import Path
 from typing import Iterator
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -149,8 +151,8 @@ def register_db(spark: SparkSession, root: str) -> list[str]:
     Each table directory is registered as a temp view named
     ``{schema}.{table}`` is not expressible for temp views, so we use
     the Spark-native equivalent: ``CREATE DATABASE {schema}`` plus an
-    external table pointing at the directory, falling back to a
-    flattened ``{schema}__{table}`` temp view when the catalog refuses.
+    external table pointing at the directory. A table directory Spark
+    cannot read as its sniffed format raises an error naming it.
     Returns the list of fully qualified names registered.
 
     Reference parity: src/db.rs:54-150 (three-level catalog from
@@ -176,7 +178,6 @@ def register_db(spark: SparkSession, root: str) -> list[str]:
                 if fmt is None:
                     continue
                 table = table_dir.name
-                qualified = f"{schema}.{table}"
                 try:
                     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
                     spark.sql(f"DROP TABLE IF EXISTS `{schema}`.`{table}`")
@@ -186,12 +187,10 @@ def register_db(spark: SparkSession, root: str) -> list[str]:
                         source=fmt,
                         **({"header": "true", "inferSchema": "true"} if fmt == "csv" else {}),
                     )
-                except Exception:
-                    reader = spark.read
-                    if fmt == "csv":
-                        reader = reader.option("header", "true").option("inferSchema", "true")
-                    df = reader.format(fmt).load(str(table_dir))
-                    qualified = f"{schema}__{table}"
-                    df.createOrReplaceTempView(qualified)
-                registered.append(qualified)
+                except (PySparkException, Py4JJavaError) as e:
+                    first_line = str(e).split("\n")[0]
+                    raise ValueError(
+                        f"cannot register {table_dir} as {fmt} table {schema}.{table}: {first_line}"
+                    ) from e
+                registered.append(f"{schema}.{table}")
     return registered

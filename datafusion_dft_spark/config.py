@@ -243,7 +243,7 @@ class AppConfig:
     flightsql_client: FlightClientConfig = field(default_factory=FlightClientConfig)
     udfs: list[UdfConfig] = field(default_factory=list)
     # [db] path — app-state directory (src/config.rs DbConfig): the
-    # observability requests MapTable persists under it across restarts
+    # ``requests`` log is saved under it at exit and restored at start
     # (tables/map_table.rs:69-71 "serialized on app shutdown").
     db_path: str | None = None
 

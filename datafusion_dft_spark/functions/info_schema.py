@@ -166,6 +166,10 @@ def _refresh_routines(spark: SparkSession, catalog: str) -> None:
     ctx.routines_fresh = True
 
 
+def _quote_ident(part: str) -> str:
+    return "`" + part.replace("`", "``") + "`"
+
+
 def refresh_information_schema(spark: SparkSession) -> None:
     catalog = spark.catalog.currentCatalog()
     tables = []
@@ -181,7 +185,8 @@ def refresh_information_schema(spark: SparkSession) -> None:
             schema = t.namespace[0] if t.namespace else db.name
             tables.append((t.catalog or catalog, schema, t.name, ttype))
             try:
-                for i, c in enumerate(spark.catalog.listColumns(t.name, t.namespace[0] if t.namespace else None)):
+                qualified = ".".join(_quote_ident(p) for p in [*(t.namespace or []), t.name])
+                for i, c in enumerate(spark.catalog.listColumns(qualified)):
                     columns.append(
                         (
                             t.catalog or catalog,

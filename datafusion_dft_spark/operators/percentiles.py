@@ -281,26 +281,6 @@ def percentile_exact_refine(
     return probe.select(*gcols).join(bounds, group_cols, "left")
 
 
-def median_exact_hist(
-    df: DataFrame, group_cols: list[str], value_col: str, out_col: str | None = None
-) -> DataFrame:
-    """Exact median per group — ``percentile_exact_hist`` at p=0.5."""
-    return percentile_exact_hist(
-        df, group_cols, value_col, 0.5, out_col or f"median_{value_col}"
-    )
-
-
-def percentile_col(value_col: str, p: float) -> Column:
-    """The builtin exact-percentile aggregate expression (small-domain path).
-
-    Kept as the single place that spells the builtin, so call sites can
-    choose per column: builtin for value domains known to be small
-    (its per-group map IS the histogram then), ``percentile_exact_hist``
-    when the domain scales with the data.
-    """
-    return F.expr(f"percentile({value_col}, {p})")
-
-
 def group_drift(
     df: DataFrame,
     group_cols: list[str],

@@ -535,25 +535,15 @@ def cosine_dup_pairs_incremental(
 
 
 def _collect_matrix(raw: DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """Materialize (ids, matrix) for a bounded corpus, Arrow-first.
+    """Materialize (ids, matrix) for a bounded corpus through Arrow.
 
     ``toArrow`` moves the vectors as one contiguous Arrow buffer that
-    reshapes into the numpy matrix without touching Python rows; the
-    Row-collect fallback covers sessions without Arrow collection.
+    reshapes into the numpy matrix without touching Python rows; a
+    ragged or wrong-dim vector fails the reshape.
     """
-    try:
-        tbl = raw.toArrow()
-        ids = np.asarray(tbl.column("vid").to_numpy(zero_copy_only=False), dtype=np.int64)
-        lists = tbl.column("v").combine_chunks()
-    except Exception:
-        # only the Arrow COLLECTION may fall back (capability gap /
-        # transient session state); reshape failures below are data bugs
-        # (ragged or wrong-dim vectors) and must surface, not silently
-        # re-execute the scan through the row path
-        rows = raw.collect()
-        ids = np.fromiter((r.vid for r in rows), dtype=np.int64, count=len(rows))
-        mat = np.array([r.v for r in rows]) if rows else np.empty((0, dim))
-        return ids, mat
+    tbl = raw.toArrow()
+    ids = np.asarray(tbl.column("vid").to_numpy(zero_copy_only=False), dtype=np.int64)
+    lists = tbl.column("v").combine_chunks()
     mat = np.asarray(
         lists.flatten().to_numpy(zero_copy_only=False), dtype=np.float64
     ).reshape(len(ids), dim)

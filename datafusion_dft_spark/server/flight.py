@@ -165,10 +165,7 @@ class DftFlightServer(fl.FlightServerBase):
 
     def _record(self, start: float, request_id: str | None, path: str, sql: str | None, status: int, rows: int | None = None) -> None:
         ms = int((time.perf_counter() - start) * 1000)
-        try:
-            self._obs.record(path, sql, ms, rows, status, request_id=request_id)
-        except Exception:
-            pass
+        self._obs.record(path, sql, ms, rows, status, request_id=request_id)
 
     def _store_plan(self, request_id: str, df) -> None:
         with self._lock:

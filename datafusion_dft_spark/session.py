@@ -73,8 +73,8 @@ class AppContext:
     ``ExecutionContext`` every frontend shares, src/execution.rs:67-82):
     the lazy ``catalog.Tables`` per corpus directory, the config-UDF
     signatures, the ``register_db`` (catalog, schema) -> root pairs,
-    whether information_schema.routines is current, and the one
-    ``requests`` log both servers record to.
+    whether information_schema.routines is current, and the request
+    logs by view name: ``requests`` is the one both servers record to.
 
     ``AppContext.of(spark)`` is the only lookup. The context is an
     attribute of the session object, so it lives and dies with it.
@@ -89,7 +89,7 @@ class AppContext:
         self.udfs: dict[str, UdfConfig] = {}
         self.catalog_schemas: dict[tuple[str, str], str] = {}
         self.routines_fresh = False
-        self._requests: Observability | None = None
+        self.request_logs: dict[str, Observability] = {}
 
     @classmethod
     def of(cls, spark: SparkSession) -> AppContext:
@@ -110,11 +110,12 @@ class AppContext:
         built on it (with that server's ``db_path``). Servers call this
         while they are built, never on a request thread."""
         with self._LOCK:
-            if self._requests is None:
+            log = self.request_logs.get("requests")
+            if log is None:
                 from .observability import Observability
 
-                self._requests = Observability(self.spark, persist_path=db_path)
-            return self._requests
+                log = Observability(self.spark, persist_path=db_path)
+            return log
 
 
 def default_parallelism() -> int:

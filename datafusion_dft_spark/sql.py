@@ -310,6 +310,14 @@ def _rewrite_information_schema(spark: SparkSession, sql: str) -> str:
     return _INFO_SCHEMA_RE.sub(lambda m: f"__info_{m.group(1).lower()}", sql)
 
 
+def _refresh_request_logs(spark: SparkSession, sql: str) -> None:
+    """Rebuild each request log's view that the statement names: the
+    logs record without Spark and build their views on read."""
+    for log in list(AppContext.of(spark).request_logs.values()):
+        if log.names_view(sql):
+            log.refresh()
+
+
 # Statement head only — the tail clauses (STORED AS / PARTITIONED BY /
 # OPTIONS / LOCATION / WITH ORDER / legacy WITH HEADER ROW) may appear
 # in ANY order in DataFusion's parser, so they are consumed by a clause
@@ -610,6 +618,7 @@ def prepare_statement(spark: SparkSession, stmt: str) -> str:
     """Apply all app-level rewrites to one statement."""
     if _FUNCTION_DDL_RE.match(stmt):
         AppContext.of(spark).routines_fresh = False
+    _refresh_request_logs(spark, stmt)
     ext = _rewrite_external_table(spark, stmt)
     if ext is not None:
         return ext

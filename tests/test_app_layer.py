@@ -8,6 +8,8 @@ rewrites, output writers, metadata UDTF, information_schema emulation.
 from __future__ import annotations
 
 import os
+import re
+import warnings
 
 import pytest
 
@@ -436,6 +438,38 @@ def test_register_db_directory_layout(spark, tmp_path):
     name = registered[0]
     got = spark.sql(f"SELECT answer FROM {name}").collect()
     assert got[0].answer == 42
+
+
+def test_register_db_unreadable_table_names_its_directory(spark, tmp_path):
+    """A table directory Spark cannot read as its sniffed format raises
+    with the directory named, and no stand-in view is registered."""
+    from datafusion_dft_spark.catalog import register_db
+
+    tdir = tmp_path / "baddb" / "c" / "x" / "y"
+    tdir.mkdir(parents=True)
+    (tdir / "part.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(ValueError, match=re.escape(str(tdir))):
+        register_db(spark, str(tmp_path / "baddb"))
+    assert not spark.catalog.tableExists("x__y")
+
+
+def test_information_schema_columns_of_a_db_table_without_deprecated_call(spark, tmp_path):
+    """Database tables' columns are listed through the qualified
+    one-argument ``listColumns``, which raises no FutureWarning."""
+    from datafusion_dft_spark.catalog import register_db
+    from datafusion_dft_spark.functions.info_schema import refresh_information_schema
+
+    tdir = tmp_path / "isdb" / "c" / "is_schema" / "is_table"
+    spark.sql("SELECT 1 AS a, 'x' AS b").coalesce(1).write.parquet(str(tdir))
+    assert register_db(spark, str(tmp_path / "isdb")) == ["is_schema.is_table"]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        refresh_information_schema(spark)
+    cols = spark.sql(
+        "SELECT column_name FROM __info_columns "
+        "WHERE table_schema = 'is_schema' AND table_name = 'is_table' ORDER BY ordinal_position"
+    ).collect()
+    assert [c.column_name for c in cols] == ["a", "b"]
 
 
 def test_parquet_metadata_column_parity_with_reference():

@@ -19,6 +19,7 @@ import threading
 import pytest
 
 from datafusion_dft_spark.config import AppConfig, credentials_ok
+from datafusion_dft_spark.sql import execute_sql
 
 FRONTENDS = ("cli", "repl", "http", "flight")
 
@@ -163,7 +164,8 @@ def test_both_servers_record_to_one_requests_log(spark, sf_dir):
         client.close()
     finally:
         server.shutdown()
-    rows = spark.sql("SELECT request_id, sql, path FROM requests").collect()
+    (df,) = execute_sql(spark, "SELECT request_id, sql, path FROM requests")
+    rows = df.collect()
     assert (http_sql, "/sql") in {(r.sql, r.path) for r in rows}
     flight_ids = {r.request_id for r in rows if r.sql == flight_sql}
     assert {r.path for r in rows if r.request_id in flight_ids} == {

@@ -19,6 +19,7 @@ from datafusion_dft_spark.catalog import register_views
 from datafusion_dft_spark.config import AppConfig, FlightConfig, parse_config
 from datafusion_dft_spark.functions.info_schema import refresh_information_schema
 from datafusion_dft_spark.server.flight import DftFlightServer
+from datafusion_dft_spark.sql import execute_sql
 
 
 def _cmd(d: dict) -> fl.FlightDescriptor:
@@ -242,9 +243,21 @@ def test_list_actions(client):
 
 def test_observability_records_requests(flight_server, client, spark):
     _fetch(client, _cmd({"type": "statement", "query": "SELECT 1 AS x"}))
-    paths = [r.path for r in spark.table("requests").collect()]
+    paths = [r.path for r in flight_server._obs.df().collect()]
     assert "/get_flight_info_statement" in paths
     assert "/do_get_statement" in paths
+
+
+def test_failed_record_fails_the_request(flight_server, client, monkeypatch):
+    """A request whose log row cannot be written fails at the client
+    instead of succeeding with its row lost."""
+
+    def boom(*a, **kw):
+        raise RuntimeError("requests log unavailable")
+
+    monkeypatch.setattr(flight_server._obs, "record", boom)
+    with pytest.raises(fl.FlightError, match="requests log unavailable"):
+        client.get_flight_info(_cmd({"type": "statement", "query": "SELECT 1 AS x"}))
 
 
 def test_bearer_auth(spark):
@@ -512,10 +525,12 @@ def test_do_get_client_cancel_leaves_session_clean(spark, sf_dir):
         reader.cancel()
 
         def status():
-            rows = spark.sql(
+            (df,) = execute_sql(
+                spark,
                 f"SELECT status FROM requests WHERE request_id = '{handle}' "
-                "AND path = '/do_get_statement'"
-            ).collect()
+                "AND path = '/do_get_statement'",
+            )
+            rows = df.collect()
             return rows[0].status if rows else None
 
         tracker = spark.sparkContext.statusTracker()

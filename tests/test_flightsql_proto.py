@@ -14,6 +14,7 @@ from datafusion_dft_spark.catalog import register_views
 from datafusion_dft_spark.functions.info_schema import refresh_information_schema
 from datafusion_dft_spark.server import flightsql_proto as fsp
 from datafusion_dft_spark.server.flight import DftFlightServer
+from datafusion_dft_spark.sql import execute_sql
 
 URL = b"type.googleapis.com/arrow.flight.protocol.sql.CommandStatementQuery"
 
@@ -183,8 +184,8 @@ def test_e2e_do_put_rejected(proto_server, spark):
         )
         writer.write_table(pa.table({"x": [1]}))
         writer.close()
-    paths = [r.path for r in spark.table("requests").collect()]
-    assert "/do_put" in paths
+    (df,) = execute_sql(spark, "SELECT path FROM requests")
+    assert "/do_put" in [r.path for r in df.collect()]
 
 
 def test_e2e_empty_result_stream(proto_server):

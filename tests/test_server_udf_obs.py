@@ -15,6 +15,7 @@ from datafusion_dft_spark.config import AppConfig, HttpConfig, UdfConfig, parse_
 from datafusion_dft_spark.functions.udf_registry import UdfTypeError, register_udf, register_udfs
 from datafusion_dft_spark.observability import Observability
 from datafusion_dft_spark.server.http import create_app
+from datafusion_dft_spark.sql import execute_sql
 
 
 @pytest.fixture(scope="module")
@@ -204,15 +205,18 @@ def test_dedicated_metrics_listener_matches_endpoint(spark, sf_dir):
 def test_observability_requests_table(client, spark):
     # the session's one log also holds earlier servers' rows for this SQL
     def ok_rows() -> int:
-        return spark.sql(
+        (df,) = execute_sql(
+            spark,
             "SELECT count(*) AS n FROM requests "
-            "WHERE sql = 'SELECT 1 AS one' AND path = '/sql' AND status = 200"
-        ).first().n
+            "WHERE sql = 'SELECT 1 AS one' AND path = '/sql' AND status = 200",
+        )
+        return df.first().n
 
     before = ok_rows()
     client.post("/sql", json={"sql": "SELECT 1 AS one"})
     assert ok_rows() == before + 1
-    failed = spark.sql("SELECT count(*) AS n FROM requests WHERE status = 400 OR status = 500").collect()[0].n
+    (df,) = execute_sql(spark, "SELECT count(*) AS n FROM requests WHERE status = 400 OR status = 500")
+    failed = df.first().n
     assert failed >= 1  # the error-path test above was recorded
 
 
