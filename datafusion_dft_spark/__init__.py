@@ -14,7 +14,7 @@ Layout:
     queries/    — operator inventory from SURVEY.md §2 (TPC-H-adapted + analytics)
     operators/  — reusable large-scale operators (dedup, similarity, text, multimodal)
     sources/    — readers/writers with format sniffing (src/cli/mod.rs AnyWriter analog)
-    functions/  — JSON function shims, parquet_metadata table function
+    functions/  — parquet_metadata table function
     plans/      — bench/analyze harness (crates/datafusion-app/src/local.rs analog)
     streaming/  — Structured Streaming variants (beyond-reference)
 """

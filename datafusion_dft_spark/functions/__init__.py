@@ -1,1 +1,1 @@
-"""Function extensions: JSON shims, parquet metadata, information_schema."""
+"""Function extensions: parquet metadata, information_schema."""

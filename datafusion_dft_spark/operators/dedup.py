@@ -90,10 +90,7 @@ def _incr_should_broadcast(spark, n_batch: int, n_corpus: int) -> bool:
     """
     if n_batch > _INCR_BROADCAST_MAX_BATCH:
         return False
-    try:
-        n_exec = int(spark.conf.get("spark.executor.instances"))
-    except Exception:
-        n_exec = 0
+    n_exec = int(spark.conf.get("spark.executor.instances", "0"))
     p = n_exec if n_exec > 0 else max(1, spark.sparkContext.defaultParallelism)
     return n_batch * p <= n_corpus
 

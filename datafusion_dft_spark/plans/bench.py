@@ -13,6 +13,9 @@ SURVEY.md §7 "hard parts"):
                 physical planning (+ AQE prep)
 - ``execute`` — running the plan to completion (count-free noop write)
 - ``total``   — sum of the above
+
+``fresh_execution`` re-runs an already built DataFrame's plan as a new
+execution; FlightSQL's DoGet and the ``bench.py`` samples both use it.
 """
 
 from __future__ import annotations
@@ -59,6 +62,23 @@ class BenchResult:
     @property
     def rows_consistent(self) -> bool:
         return len(set(self.row_counts)) <= 1
+
+
+def fresh_execution(df):
+    """A new QueryExecution of ``df``'s plan, so every delivery runs every
+    stage: reusing ``df``'s own would let a prepared statement's second
+    fetch skip its scan stage and serve shuffle output from before the
+    files changed. The plan taken is ``commandExecuted``, not
+    ``logical``: a command (INSERT, CREATE ...) already ran when the
+    statement was planned and is held there as its result rows, so it
+    is not run again."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df._jdf.sparkSession(), df._jdf.queryExecution().commandExecuted()
+    )
+    return DataFrame(jdf, spark)
 
 
 def _timed_run(spark: SparkSession, sql: str):

@@ -469,7 +469,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("dedup", "clustering"),
     # bench=False: the fixpoint loop materializes per-round caches, so a
-    # steady-state re-collect would measure either a cache hit or (after
+    # fresh execution would measure either a cache hit or (after
     # clearCache) an exponentially re-expanded join lineage — neither is
     # a meaningful per-query number. Cold cost is the loop itself.
     bench=False,

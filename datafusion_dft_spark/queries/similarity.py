@@ -22,14 +22,15 @@ def _embedding_rows(emb: DataFrame, sf_dir: str) -> int:
     """Row count of ``embeddings.parquet`` from its footer (metadata
     only, no Spark job). A missing or remote path (OSError) or an
     unreadable footer (pyarrow ArrowInvalid on a truncated/mid-rewrite
-    file) falls back to a Spark-side count."""
+    file) falls back to a Spark-side count; any other error raises."""
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
         return pq.read_metadata(os.path.join(sf_dir, "embeddings.parquet")).num_rows
-    except Exception:
+    except (OSError, pa.ArrowInvalid):
         return emb.count()
 
 

@@ -52,6 +52,7 @@ import pyarrow as pa
 import pyarrow.flight as fl
 
 from ..config import AppConfig, credentials_ok
+from ..plans.bench import fresh_execution
 from ..session import AppContext
 from ..sql import contains_copy, execute_sql, split_statements
 from . import flightsql_proto as fsp
@@ -531,23 +532,6 @@ def _q(s: str) -> str:
     return str(s).replace("'", "''")
 
 
-def _fresh_execution(df):
-    """A new QueryExecution of ``df``'s plan, so every delivery runs every
-    stage: reusing ``df``'s own would let a prepared statement's second
-    fetch skip its scan stage and serve shuffle output from before the
-    files changed. The plan taken is ``commandExecuted``, not
-    ``logical``: a command (INSERT, CREATE ...) already ran when the
-    statement was planned and is held there as its result rows, so it
-    is not run again."""
-    from pyspark.sql import DataFrame
-
-    spark = df.sparkSession
-    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        df._jdf.sparkSession(), df._jdf.queryExecution().commandExecuted()
-    )
-    return DataFrame(jdf, spark)
-
-
 def arrow_batches(df):
     """Yield ``df``'s result as Spark's own Arrow batches, in order.
 
@@ -570,7 +554,7 @@ def arrow_batches(df):
         error_on_duplicated_field_names_in_struct=True,
         prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
     )
-    rdd = _fresh_execution(df)._jdf.toArrowBatchRdd()
+    rdd = fresh_execution(df)._jdf.toArrowBatchRdd()
     sock = spark._jvm.PythonRDD.toLocalIteratorAndServe(rdd, True)
     blobs = _local_iterator_from_socket(sock, NoOpSerializer())
     try:

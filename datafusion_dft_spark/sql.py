@@ -260,8 +260,8 @@ _JSON_LENGTH_RE = re.compile(r"(?i)\bjson_length\s*\(")
 
 
 def _rewrite_json_length(sql: str) -> str:
-    """Paren-balanced json_length rewrite matching json_fns.json_length:
-    array length, falling back to object key count."""
+    """Paren-balanced json_length rewrite: array length, falling back to
+    object key count."""
     out: list[str] = []
     i = 0
     while (m := _JSON_LENGTH_RE.search(sql, i)) is not None:

@@ -392,8 +392,8 @@ def test_arrow_batches_run_no_python_stage(spark):
     """do_get forwards the engine's own Arrow batches: the plan it runs
     has no Python-eval node, and a 100k-row, 2-partition result arrives
     complete and in order, equal to ``toArrow()``."""
+    from datafusion_dft_spark.plans.bench import fresh_execution
     from datafusion_dft_spark.plans.explain import python_eval_node_ids
-    from datafusion_dft_spark.server.flight import _fresh_execution
     from pyspark.sql import functions as F
 
     df = spark.range(0, 100_000, 1, 2).select(
@@ -403,7 +403,7 @@ def test_arrow_batches_run_no_python_stage(spark):
         F.array(F.col("id"), F.col("id") + 1).alias("pair"),
         F.timestamp_micros(F.col("id") * 1_000_000).alias("ts"),
     )
-    assert python_eval_node_ids(_fresh_execution(df)) == set()
+    assert python_eval_node_ids(fresh_execution(df)) == set()
     want = df.toArrow()
     got = _to_table(df, want.schema)
     assert got.num_rows == 100_000

@@ -10,6 +10,8 @@ benchmark would catch it.
 
 from __future__ import annotations
 
+import pytest
+
 from datafusion_dft_spark.plans import explain as ex
 from datafusion_dft_spark.registry import all_queries
 
@@ -191,6 +193,29 @@ def test_cosine_incremental_corpus_scanned_once_no_self_join(spark, sf_dir):
     table_joins = re.findall(r"(\w+Join) \[table#", sp)
     assert table_joins == ["BroadcastHashJoin"], (table_joins, sp)
     assert "CartesianProduct" not in sp, sp
+
+
+def test_incr_broadcast_executor_instances():
+    """The replication factor is ``spark.executor.instances`` when set,
+    else the default parallelism; a value that is not an integer
+    raises instead of being read as unset."""
+    from types import SimpleNamespace
+
+    from datafusion_dft_spark.operators import dedup as dd
+
+    def session(**conf):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key, default=None: conf.get(key, default)),
+            sparkContext=SimpleNamespace(defaultParallelism=4),
+        )
+
+    assert dd._incr_should_broadcast(session(), 10, 40)
+    assert not dd._incr_should_broadcast(session(), 10, 39)
+    executors = {"spark.executor.instances": "2"}
+    assert dd._incr_should_broadcast(session(**executors), 10, 20)
+    assert not dd._incr_should_broadcast(session(**executors), 10, 19)
+    with pytest.raises(ValueError):
+        dd._incr_should_broadcast(session(**{"spark.executor.instances": "two"}), 10, 40)
 
 
 def test_incr_broadcast_ratio_rule(spark, sf_dir):

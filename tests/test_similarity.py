@@ -599,3 +599,23 @@ def test_semantic_dup_pairs_multi_matches_per_codebook(spark, emb):
 def test_semantic_dup_pairs_multi_rejects_empty_assignments():
     with pytest.raises(ValueError, match="assignments must be non-empty"):
         sim.semantic_dup_pairs_multi([])
+
+
+def test_embedding_rows_falls_back_only_on_unreadable_footer(emb, sf_dir, monkeypatch):
+    """``_embedding_rows`` counts through Spark when the footer cannot be
+    read (a missing path: OSError), and lets any other error raise."""
+    import pyarrow.parquet as pq
+
+    from datafusion_dft_spark.queries.similarity import _embedding_rows
+
+    def raise_(exc):
+        def read_metadata(*args, **kwargs):
+            raise exc
+
+        return read_metadata
+
+    monkeypatch.setattr(pq, "read_metadata", raise_(OSError("no such file")))
+    assert _embedding_rows(emb, sf_dir) == emb.count()
+    monkeypatch.setattr(pq, "read_metadata", raise_(TypeError("bad argument")))
+    with pytest.raises(TypeError, match="bad argument"):
+        _embedding_rows(emb, sf_dir)

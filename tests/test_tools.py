@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from datafusion_dft_spark.tools.tpch_gen import gen_tables, generate
 
 
@@ -174,36 +176,73 @@ def test_supplier_spread_follows_spec_at_scale(spark):
         assert r.ps_suppkey in expect, (r.ps_partkey, r.ps_suppkey)
 
 
-def test_proxy_detail_protocol_guard(tmp_path):
-    """tools/proxy_compare.load_detail (r13 ADVICE): rows measured
-    under a different sf_dir or runs count refuse to merge (raise
-    ProtocolMismatch) instead of silently mixing protocols under one
-    PROXY.md header; malformed files reset to fresh state."""
+def _bench_module():
+    """The repository-root ``bench.py``, loaded as a module."""
     import importlib.util
-    import json
-    import pytest
     from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
-        "proxy_compare",
-        Path(__file__).resolve().parents[1] / "tools" / "proxy_compare.py",
+        "bench", Path(__file__).resolve().parents[1] / "bench.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
 
-    fresh = mod.load_detail(str(tmp_path / "absent.json"), "/d", 4)
-    assert fresh == {"sf_dir": "/d", "runs": 4, "rows": {}, "sessions": []}
 
-    p = tmp_path / "detail.json"
-    committed = {"sf_dir": "/d", "runs": 4, "rows": {"q": {}}, "sessions": [{}]}
-    p.write_text(json.dumps(committed))
-    assert mod.load_detail(str(p), "/d", 4) == committed
-    with pytest.raises(mod.ProtocolMismatch):
-        mod.load_detail(str(p), "/other", 4)
-    with pytest.raises(mod.ProtocolMismatch):
-        mod.load_detail(str(p), "/d", 8)
+def _completed(spark, group: str) -> tuple[int, int]:
+    """(stages, tasks) that the jobs of ``group`` ran to completion, read
+    from the status tracker once the listener bus has drained. A stage
+    skipped because its shuffle output was already there completes no
+    task."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    stages = tasks = 0
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            st = tracker.getStageInfo(sid)
+            if st is not None and st.numTasks and st.numCompletedTasks == st.numTasks:
+                stages += 1
+                tasks += st.numCompletedTasks
+    return stages, tasks
 
-    p.write_text(json.dumps({"sf_dir": "/d", "runs": 4}))  # missing keys
-    assert mod.load_detail(str(p), "/d", 4)["rows"] == {}
-    p.write_text("{corrupt")
-    assert mod.load_detail(str(p), "/d", 4)["rows"] == {}
+
+def test_bench_samples_rerun_every_stage(spark, sf_dir):
+    """Each ``bench.py`` steady sample is a fresh execution: after the
+    cold run, three samples of q01 each complete exactly the stages and
+    tasks the first one did. Calling ``toArrow()`` again on the built
+    DataFrame instead completes fewer from its second call on, because
+    Spark skips the stages whose shuffle output is still there."""
+    import uuid
+
+    from datafusion_dft_spark.registry import all_queries
+
+    bench = _bench_module()
+    sc = spark.sparkContext
+    df = all_queries()["q01_pricing_summary"].build(spark, sf_dir)
+    df.toArrow()
+    counts = []
+    for _ in range(3):
+        group = f"bench-sample-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bench sample")
+        try:
+            bench.sample(df)
+        finally:
+            sc.setJobGroup("", "")
+        counts.append(_completed(spark, group))
+    assert counts[0][0] >= 2, counts  # scan + aggregate: at least one shuffle
+    assert counts[1] == counts[0] and counts[2] == counts[0], counts
+
+
+@pytest.mark.parametrize("name", ["q01_pricing_summary", "dedup_minhash_lsh"])
+def test_bench_sample_equals_cold_result(spark, sf_dir, name):
+    """A steady sample delivers the table the cold run did, also for a
+    builder that ``.cache()``s an intermediate (``dedup_minhash_lsh``):
+    the sample drops that cache and recomputes it."""
+    from datafusion_dft_spark.registry import all_queries
+
+    df = all_queries()[name].build(spark, sf_dir)
+    want = df.toArrow()
+    _, got = _bench_module().sample(df)
+    keys = [(c, "ascending") for c in want.column_names]  # the union is unordered
+    assert want.num_rows > 0
+    assert got.sort_by(keys).equals(want.sort_by(keys))
