@@ -272,7 +272,7 @@ def run_flightsql_client(args, scripts: list[str]) -> int:
                 print(format_arrow_table(table, limit=args.limit))
                 if args.time:
                     print(f"elapsed: {time.perf_counter() - t0:.3f}s")
-            except Exception as e:
+            except Exception as e:  # mirror dft: report per-statement, keep going
                 print(f"error in statement: {stmt[:80]}...\n  {e}", file=sys.stderr)
                 rc = 1
     client.close()
@@ -316,7 +316,7 @@ def run_flightsql_command(args) -> int:
         table = _do_command(client, cmd_builders[args.fsql_command](args), options)
         print(format_arrow_table(table, limit=args.limit))
         return 0
-    except Exception as e:
+    except Exception as e:  # the CLI's reporter: any RPC failure is printed and exits 1
         print(f"error: {e}", file=sys.stderr)
         return 1
     finally:

@@ -11,6 +11,7 @@ at query time.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -170,6 +171,24 @@ def _quote_ident(part: str) -> str:
     return "`" + part.replace("`", "``") + "`"
 
 
+def _column_rows(spark: SparkSession, catalog: str, schema: str, table: str, qualified: str):
+    """information_schema.columns rows for one table, from the schema
+    the session resolves for it (no per-table ``listColumns``). A table
+    that does not resolve raises a ``ValueError`` naming it."""
+    try:
+        fields = spark.table(qualified).schema.fields
+    except AnalysisException as e:
+        first_line = str(e).split("\n")[0]
+        raise ValueError(
+            f"information_schema: cannot read columns of {qualified}: {first_line}"
+        ) from e
+    return [
+        (catalog, schema, table, f.name, i + 1, f.dataType.simpleString(),
+         "YES" if f.nullable else "NO")
+        for i, f in enumerate(fields)
+    ]
+
+
 def refresh_information_schema(spark: SparkSession) -> None:
     catalog = spark.catalog.currentCatalog()
     tables = []
@@ -184,22 +203,8 @@ def refresh_information_schema(spark: SparkSession) -> None:
             ttype = "VIEW" if t.tableType in ("TEMPORARY", "VIEW") else "BASE TABLE"
             schema = t.namespace[0] if t.namespace else db.name
             tables.append((t.catalog or catalog, schema, t.name, ttype))
-            try:
-                qualified = ".".join(_quote_ident(p) for p in [*(t.namespace or []), t.name])
-                for i, c in enumerate(spark.catalog.listColumns(qualified)):
-                    columns.append(
-                        (
-                            t.catalog or catalog,
-                            schema,
-                            t.name,
-                            c.name,
-                            i + 1,
-                            c.dataType,
-                            "YES" if c.nullable else "NO",
-                        )
-                    )
-            except Exception:
-                pass
+            qualified = ".".join(_quote_ident(p) for p in [*(t.namespace or []), t.name])
+            columns += _column_rows(spark, t.catalog or catalog, schema, t.name, qualified)
     # Session temp views live outside databases — catalogued exactly once
     # under the "session" schema (with their columns), regardless of how
     # many databases exist or whether a db table shares the name.
@@ -210,13 +215,7 @@ def refresh_information_schema(spark: SparkSession) -> None:
                 # detail; information_schema surfaces below instead.
                 continue
             tables.append((catalog, "session", t.name, "VIEW"))
-            try:
-                for i, c in enumerate(spark.catalog.listColumns(t.name)):
-                    columns.append(
-                        (catalog, "session", t.name, c.name, i + 1, c.dataType, "YES" if c.nullable else "NO")
-                    )
-            except Exception:
-                pass
+            columns += _column_rows(spark, catalog, "session", t.name, _quote_ident(t.name))
     # Advertise the information_schema views themselves, matching the
     # reference's SHOW TABLES content (src/db.rs:186-198).
     for name in _INFO_VIEWS:
@@ -235,18 +234,15 @@ def refresh_information_schema(spark: SparkSession) -> None:
     # df_settings: the session's runtime conf as a relation (DataFusion's
     # information_schema.df_settings analog over Spark conf).
     settings = sorted(spark.sparkContext.getConf().getAll())
-    try:
-        seen = {k for k, _ in settings}
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.session.timeZone",
-            "spark.sql.files.maxPartitionBytes",
-        ):
-            if k not in seen:
-                settings.append((k, spark.conf.get(k)))
-    except Exception:
-        pass
+    seen = {k for k, _ in settings}
+    for k in (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.session.timeZone",
+        "spark.sql.files.maxPartitionBytes",
+    ):
+        if k not in seen:
+            settings.append((k, spark.conf.get(k)))
     spark.createDataFrame(settings, _SETTINGS_SCHEMA).createOrReplaceTempView(
         "__info_df_settings"
     )

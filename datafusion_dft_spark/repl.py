@@ -150,7 +150,7 @@ class Repl:
                 try:
                     n = execute_ddl_file(self.spark, self.ddl_path)
                     self.echo(f"ran {n} DDL statement(s) from {self.ddl_path}")
-                except Exception as e:
+                except Exception as e:  # the REPL's reporter: print the error, keep the session
                     self.echo(f"error: {str(e).splitlines()[0]}")
             elif arg == "":
                 try:
@@ -186,7 +186,7 @@ class Repl:
         if self._fl_client is not None:
             try:
                 self._fl_client.close()
-            except Exception:
+            except Exception:  # best-effort close of a connection that is being dropped
                 pass
             self._fl_client = None
 
@@ -223,7 +223,7 @@ class Repl:
         if self.flight_url:
             try:
                 table = self._run_flight(sql)
-            except Exception as e:
+            except Exception as e:  # the REPL's reporter: record, print, keep the session
                 msg = str(e).splitlines()[0]
                 record(None, msg)
                 self.echo(f"error: {msg}")
@@ -231,7 +231,7 @@ class Repl:
         else:
             try:
                 dfs = execute_sql(self.spark, sql.rstrip(";"))
-            except Exception as e:
+            except Exception as e:  # the REPL's reporter: record, print, keep the session
                 msg = str(e).splitlines()[0]
                 record(None, msg)
                 self.echo(f"error: {msg}")
@@ -241,7 +241,7 @@ class Repl:
                 return
             try:
                 table = dfs[-1].toArrow()
-            except Exception as e:
+            except Exception as e:  # the REPL's reporter: record, print, keep the session
                 msg = str(e).splitlines()[0]
                 record(None, msg)
                 self.echo(f"error: {msg}")

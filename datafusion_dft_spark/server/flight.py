@@ -362,7 +362,7 @@ class DftFlightServer(fl.FlightServerBase):
                 sql = self._catalog_command_sql(cmd)
                 df = self._sql_to_df(sql)
             info = self._flight_info_for_df(df, request_id, descriptor, proto=proto)
-        except Exception:
+        except Exception:  # record the failed request, then re-raise it
             self._record(start, request_id, path, sql, 13)
             raise
         self._record(start, request_id, path, sql, 0)
@@ -402,7 +402,7 @@ class DftFlightServer(fl.FlightServerBase):
         if isinstance(df, _DeferredCopyScript):
             try:
                 df = df.execute()  # the COPY side effect happens here, per DoGet
-            except Exception as e:
+            except Exception as e:  # record the failed COPY, then re-raise it as a Flight error
                 # a failed export must land in observability + the failed
                 # metric like any other error (it used to fail inside
                 # get_flight_info's recorded path before deferral)
@@ -429,7 +429,7 @@ class DftFlightServer(fl.FlightServerBase):
             except GeneratorExit:
                 status = 1  # the client went away before the end
                 raise
-            except Exception as e:
+            except Exception as e:  # record the failure, then re-raise it as a Flight error
                 # mid-stream failure (Spark task error): record it as
                 # such instead of a success with a partial row count
                 status = 13
@@ -450,13 +450,8 @@ class DftFlightServer(fl.FlightServerBase):
         self.metrics.inc("requests_total")
         self.metrics.inc("requests_failed")
         start = time.perf_counter()
-        kind = "non-protobuf descriptor"
-        try:
-            unpacked = fsp.unpack_any(descriptor.command or b"")
-            if unpacked is not None:
-                kind = unpacked[0]
-        except Exception:
-            pass
+        unpacked = fsp.unpack_any(descriptor.command or b"")
+        kind = unpacked[0] if unpacked is not None else "non-protobuf descriptor"
         self._record(start, None, "/do_put", None, 2)
         raise fl.FlightServerError(
             f"DoPut is not supported ({kind}): this server is query-only — "

@@ -135,7 +135,9 @@ def unpack_any(buf: bytes) -> tuple[str, bytes] | None:
     try:
         fields = decode_fields(buf)
         type_url = fields[1][0].decode()
-    except Exception:
+    except (ValueError, KeyError, AttributeError):
+        # malformed wire bytes / no type_url field / a varint where the
+        # type_url string belongs (UnicodeDecodeError is a ValueError)
         return None
     if "/" not in type_url:
         return None

@@ -129,7 +129,7 @@ def _drain_flight(reader, need: int | None):
         if need is not None and got >= need:
             try:
                 reader.cancel()
-            except Exception:
+            except Exception:  # best-effort cancel: the rows needed are already in hand
                 pass
             break
         try:
@@ -250,7 +250,7 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
             timed_out.set()
             try:
                 sc.cancelJobGroup(group)
-            except Exception:
+            except Exception:  # best-effort cancel; timed_out decides the 408
                 pass
 
         sc.setJobGroup(group, path, interruptOnCancel=True)
@@ -262,7 +262,7 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
             obs.record(path, sql, ms, n_rows, 200)
             metrics.inc("rows_returned_total", n_rows or 0)
             return jsonify(payload)
-        except Exception as e:
+        except Exception as e:  # recorded with its status, returned as 400/408
             metrics.inc("requests_failed")
             ms = int((time.perf_counter() - t0) * 1000)
             # flightsql-routed requests time out via the per-call gRPC
@@ -285,7 +285,7 @@ def create_app(spark, config: AppConfig | None = None, sf_dir: str | None = None
             import pyarrow.flight  # noqa: F401
 
             return None
-        except Exception:
+        except ImportError:
             return (
                 jsonify({"error": "FlightSQL is not enabled on this server"}),
                 400,

@@ -247,54 +247,47 @@ def tune_runtime_conf(spark: SparkSession, sf_dir: str) -> SparkSession:
     """Size shuffle/scan parallelism from the actual input bytes.
 
     The static default (shuffle partitions = cpus) is tuned for data
-    that fills the machine; at small scale factors 32 reduce tasks per
-    stage cost more in scheduling than they save in parallelism
-    (measured ~20-30% of TPC-H wall at sf0.1). The rule is the same
-    one a 100 TB deployment uses, just evaluated from the data: target
-    ~4 MB of input per shuffle partition, clamped to [8, 4096] (a real
+    that fills the machine; on small inputs a reduce task that gets
+    only a sliver of data costs more in scheduling than it gains in
+    parallelism. So the partition count follows the data: target ~4 MB
+    of input per shuffle partition, clamped to [8, 4096] (a real
     cluster raises the cap with executor count; AQE still coalesces or
-    splits at runtime from there).
+    splits at runtime from there), and scan splits give each core about
+    two splits of the input.
     """
     total = _input_bytes(spark, sf_dir)
     if not total:
         return spark
     parts = max(8, min(4096, total // (4 << 20)))
     split = max(1 << 20, min(128 << 20, total // (2 * default_parallelism())))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    except Exception:
-        pass
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     return spark
 
 
 def _input_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Total bytes of ``*.parquet`` directly under ``sf_dir``.
 
-    Plain local paths use os.glob; any URI with a scheme (``s3a://``,
-    ``hdfs://``, ``file://`` — incl. the hf:// mapping from
-    sources.object_store) goes through the Hadoop FileSystem the scan
-    itself will use, so partition sizing works on object stores instead
-    of silently no-opping (the pre-round-6 behavior). Returns 0 when
-    the listing fails or matches nothing — caller keeps static defaults.
+    Lists through the Hadoop FileSystem the scan itself will use, for
+    plain local paths and any URI scheme alike (``s3a://``, ``hdfs://``,
+    ``file://``, incl. the hf:// mapping from sources.object_store).
+    Returns 0 when nothing matches — the caller keeps static defaults.
+    A store that cannot be listed (missing connector, unreachable
+    bucket) raises an ``OSError`` naming ``sf_dir``.
     """
-    if "://" not in sf_dir:
-        import glob
+    from py4j.protocol import Py4JJavaError
 
-        try:
-            return sum(
-                os.path.getsize(p) for p in glob.glob(os.path.join(sf_dir, "*.parquet"))
-            )
-        except OSError:
-            return 0
+    jvm = spark._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(sf_dir.rstrip("/") + "/*.parquet")
     try:
-        jvm = spark._jvm
-        pattern = jvm.org.apache.hadoop.fs.Path(sf_dir.rstrip("/") + "/*.parquet")
         fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
         statuses = fs.globStatus(pattern)
-        return sum(s.getLen() for s in statuses) if statuses else 0
-    except Exception:
-        return 0  # unreachable store / missing connector — keep defaults
+    except Py4JJavaError as e:
+        raise OSError(
+            f"cannot list input files under {sf_dir!r}: "
+            f"{e.java_exception.toString()}"
+        ) from e
+    return sum(s.getLen() for s in statuses) if statuses else 0
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
@@ -313,6 +306,6 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
         n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         if n > 4 * default_parallelism():
             spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-    except Exception:
+    except Exception:  # the driver owns this session; a conf it refuses stays as it set it
         pass
     return spark

@@ -3,23 +3,19 @@
 The reference registers Arrow IPC as a native listing format
 (``stats.rs:733-736`` lists ``ArrowExec`` among IO plans; ``src/db.rs:37-52``
 sniffs ``.arrow``). Spark's JVM distribution carries no Arrow IPC file
-source, so this engine previously streamed batches through a
-``mapInPandas`` over a path DataFrame (``sources/io.py::read_arrow``).
-This module upgrades that glue to the *idiomatic Spark 4* shape — the
+source, so this engine registers one through the *idiomatic Spark 4*
 Python DataSource API (`pyspark.sql.datasource`):
 
 - ``spark.read.format("arrowipc").load(path)`` — one input partition
   per ``.arrow`` file, each executor task yields ``pyarrow.RecordBatch``
-  objects straight into Spark's Arrow ingestion path (NO pandas hop —
-  the old glue converted every batch ``Arrow -> pandas -> Arrow``).
+  objects straight into Spark's Arrow ingestion path (no pandas hop).
 - ``df.write.format("arrowipc").save(dir)`` — DISTRIBUTED writes: each
   task serializes its partition to ``part-*.arrow`` inside the target
-  directory (the old writer collected the whole result to the driver
-  via ``toPandas()`` — a non-starter for a 100 TB export).
+  directory (nothing is collected to the driver).
 
 Registration is per-session and lazy (``register_arrow_datasource``);
-``sources/io.py`` prefers this source and falls back to the
-``mapInPandas`` glue when the DataSource API is unavailable.
+it is the only Arrow IPC reader and distributed writer ``sources/io.py``
+has, so a failed registration raises.
 """
 
 from __future__ import annotations
@@ -165,13 +161,8 @@ class ArrowIpcDataSource(DataSource):
         return _ArrowIpcWriter(path)
 
 
-def register_arrow_datasource(spark) -> bool:
-    """Idempotently register the source on this session; True on success."""
-    try:
-        registered = getattr(spark, "_arrowipc_registered", False)
-        if not registered:
-            spark.dataSource.register(ArrowIpcDataSource)
-            spark._arrowipc_registered = True
-        return True
-    except Exception:
-        return False
+def register_arrow_datasource(spark) -> None:
+    """Idempotently register the source on this session; failures raise."""
+    if not getattr(spark, "_arrowipc_registered", False):
+        spark.dataSource.register(ArrowIpcDataSource)
+        spark._arrowipc_registered = True

@@ -45,10 +45,13 @@ class DeltaNotAvailable(RuntimeError):
 
 
 def delta_available(spark: SparkSession) -> bool:
+    """True iff the delta-spark jars are on the driver's classpath."""
+    from py4j.protocol import Py4JJavaError
+
     try:
         spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 
@@ -70,10 +73,11 @@ def _checkpoint_versions(log_dir: str) -> list[int]:
         try:
             with open(hint) as f:
                 v = int(json.load(f)["version"])
+        except (OSError, ValueError, KeyError, TypeError):
+            pass  # an unreadable hint is ignored; the listing above decides
+        else:
             if glob.glob(os.path.join(log_dir, f"{v:020d}.checkpoint*.parquet")):
                 versions.add(v)
-        except Exception:
-            pass
     return sorted(versions)
 
 

@@ -77,57 +77,15 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
 def read_arrow(spark: SparkSession, path: str) -> DataFrame:
     """Distributed Arrow IPC reader (no bundled JVM datasource).
 
-    Preferred path: the Spark 4 Python DataSource
-    (``sources/arrow_datasource.py``) — one input partition per file,
+    Reads through the Spark 4 Python DataSource
+    (``sources/arrow_datasource.py``): one input partition per file,
     executors yield ``RecordBatch`` objects straight into Spark's Arrow
-    ingestion (no pandas hop). Falls back to the original
-    ``mapInPandas`` glue when DataSource registration is unavailable.
+    ingestion (no pandas hop). A failed registration raises.
     """
     from .arrow_datasource import FORMAT_NAME, register_arrow_datasource
 
-    if register_arrow_datasource(spark):
-        return spark.read.format(FORMAT_NAME).load(path)
-    return _read_arrow_mapinpandas(spark, path)
-
-
-def _read_arrow_mapinpandas(spark: SparkSession, path: str) -> DataFrame:
-    """Fallback Arrow IPC reader (pre-DataSource glue).
-
-    The driver touches only the first file's *footer* for the schema
-    (KBs); the file list is then distributed and each executor streams
-    its files' record batches through ``mapInPandas`` — Arrow-native
-    end to end, one task per file. A directory (or glob) of IPC files
-    parallelizes like any other source; a single big file is one task,
-    the same contract parquet has with a single row group.
-    """
-    import glob as _glob
-
-    import pyarrow.ipc as ipc
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    files = (
-        sorted(_glob.glob(os.path.join(path, "*.arrow")))
-        if os.path.isdir(path)
-        else sorted(_glob.glob(path)) or [path]
-    )
-    with open(files[0], "rb") as f:
-        arrow_schema = ipc.open_file(f).schema
-    spark_schema = from_arrow_schema(arrow_schema)
-
-    def read_files(pdfs):
-        import pyarrow.ipc as ipc_
-
-        for pdf in pdfs:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    rd = ipc_.open_file(fh)
-                    for i in range(rd.num_record_batches):
-                        yield rd.get_batch(i).to_pandas()
-
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string").repartition(
-        len(files)
-    )
-    return paths_df.mapInPandas(read_files, schema=spark_schema)
+    register_arrow_datasource(spark)
+    return spark.read.format(FORMAT_NAME).load(path)
 
 
 def _require_vortex():
@@ -185,47 +143,14 @@ def _vortex_write_table(table, path: str) -> None:
 def read_vortex(spark: SparkSession, path: str) -> DataFrame:
     """Distributed Vortex scan through the package's Arrow surface.
 
-    Preferred path: the Spark 4 Python DataSource
-    (``sources/vortex_datasource.py``, gated on vortex-python being
-    importable). Falls back to the ``mapInPandas`` glue — which keeps
-    the actionable NotImplementedError gate when the package is absent.
+    Reads through the Spark 4 Python DataSource
+    (``sources/vortex_datasource.py``); registering it raises the
+    actionable NotImplementedError when vortex-python is absent.
     """
     from .vortex_datasource import FORMAT_NAME, register_vortex_datasource
 
-    if register_vortex_datasource(spark):
-        return spark.read.format(FORMAT_NAME).load(path)
-    return _read_vortex_mapinpandas(spark, path)
-
-
-def _read_vortex_mapinpandas(spark: SparkSession, path: str) -> DataFrame:
-    """Fallback Vortex reader (pre-DataSource glue).
-
-    Same shape as :func:`read_arrow`: the driver opens only the first
-    file for the schema; the file list distributes and each executor
-    decodes its files to Arrow batches inside ``mapInPandas`` — one
-    task per file, no driver data path.
-    """
-    import glob as _glob
-
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    files = (
-        sorted(_glob.glob(os.path.join(path, "*.vortex")))
-        if os.path.isdir(path)
-        else sorted(_glob.glob(path)) or [path]
-    )
-    arrow_schema = _vortex_file_to_arrow(files[0]).schema
-    spark_schema = from_arrow_schema(arrow_schema)
-
-    def read_files(pdfs):
-        for pdf in pdfs:
-            for p in pdf["path"]:
-                yield _vortex_file_to_arrow(p).to_pandas()
-
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string").repartition(
-        len(files)
-    )
-    return paths_df.mapInPandas(read_files, schema=spark_schema)
+    register_vortex_datasource(spark)
+    return spark.read.format(FORMAT_NAME).load(path)
 
 
 def write_any(
@@ -244,12 +169,13 @@ def write_any(
     with ``single_file`` and the arrow/vortex writers. Arrow/vortex
     targets WITH a ``.arrow``/``.vortex`` suffix (or single_file=True)
     keep the reference's one-file export contract (driver-side via
-    ``df.toArrow()``); directory targets write DISTRIBUTED part files
-    through the Python DataSources.
+    ``df.toArrow()``); every other target is a directory of DISTRIBUTED
+    part files written through the format's Python DataSource, whose
+    registration errors propagate.
     ``options`` are Spark writer options (COPY OPTIONS, already mapped
     by ``sql._parse_copy_options``) layered over the csv header
-    default; they apply to the Spark writer formats only (arrow/vortex
-    go through the driver-side pyarrow path, which takes none).
+    default; they apply to the Spark writer formats only (the
+    arrow/vortex writers take none).
     """
     fmt = fmt or infer_format(path)
     if options and fmt in ("arrow", "vortex"):
@@ -287,14 +213,11 @@ def write_any(
     if fmt == "arrow":
         from .arrow_datasource import FORMAT_NAME, register_arrow_datasource
 
-        if (
-            not single_file
-            and not path.endswith(".arrow")
-            and register_arrow_datasource(df.sparkSession)
-        ):
+        if not single_file and not path.endswith(".arrow"):
             # Directory target → DISTRIBUTED part-file write through the
             # Python DataSource (each task serializes its own partition;
             # nothing is collected to the driver).
+            register_arrow_datasource(df.sparkSession)
             df.write.format(FORMAT_NAME).mode(mode).save(path)
             return path
         # Single-file contract ('COPY ... TO file.arrow', CLI -o): the
@@ -312,13 +235,10 @@ def write_any(
         from .vortex_datasource import FORMAT_NAME as _VORTEX_FMT
         from .vortex_datasource import register_vortex_datasource
 
-        if (
-            not single_file
-            and not path.endswith(".vortex")
-            and register_vortex_datasource(df.sparkSession)
-        ):
+        if not single_file and not path.endswith(".vortex"):
             # Directory target → distributed part-file write (mirrors
             # the arrowipc DataSource path above).
+            register_vortex_datasource(df.sparkSession)
             df.write.format(_VORTEX_FMT).mode(mode).save(path)
             return path
         _require_vortex()  # actionable gate before any execution

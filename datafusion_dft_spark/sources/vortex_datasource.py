@@ -2,10 +2,9 @@
 
 Reference registers Vortex natively via its FileFormatFactory
 (`extensions/vortex.rs:36-44`). No Spark/JVM Vortex datasource exists
-anywhere, so this engine decodes through vortex-python's Arrow surface
-— previously only via the ``mapInPandas`` glue in ``sources/io.py``.
-This module is the idiomatic Spark 4 shape, mirroring
-``arrow_datasource.py``:
+anywhere, so this engine decodes through vortex-python's Arrow surface.
+This module is its one reader and distributed writer, in the idiomatic
+Spark 4 shape, mirroring ``arrow_datasource.py``:
 
 - ``spark.read.format("vortexfile").load(path)`` — one input partition
   per ``.vortex`` file; each executor decodes its file to Arrow
@@ -17,7 +16,7 @@ This module is the idiomatic Spark 4 shape, mirroring
 
 Registration requires vortex-python importable on the DRIVER;
 executors must also resolve it (``spark.executorEnv.PYTHONPATH`` in
-the fake-package test — the same constraint the glue path has).
+the fake-package test).
 """
 
 from __future__ import annotations
@@ -152,16 +151,15 @@ class VortexDataSource(DataSource):
         return _VortexWriter(path)
 
 
-def register_vortex_datasource(spark) -> bool:
-    """Register iff vortex-python is importable; True on success."""
-    try:
-        import vortex  # noqa: F401
-    except ImportError:
-        return False
-    try:
-        if not getattr(spark, "_vortexfile_registered", False):
-            spark.dataSource.register(VortexDataSource)
-            spark._vortexfile_registered = True
-        return True
-    except Exception:
-        return False
+def register_vortex_datasource(spark) -> None:
+    """Idempotently register the source on this session; failures raise.
+
+    The missing-package gate runs first, so without vortex-python the
+    caller gets the actionable NotImplementedError.
+    """
+    from .io import _require_vortex
+
+    _require_vortex()
+    if not getattr(spark, "_vortexfile_registered", False):
+        spark.dataSource.register(VortexDataSource)
+        spark._vortexfile_registered = True

@@ -542,7 +542,9 @@ def _rewrite_copy(spark: SparkSession, stmt: str) -> str | None:
         partition_by=partition_by,
         options=options,
     )
-    return f"SELECT CAST({n} AS BIGINT) AS count"
+    # A VALUES row is a LocalRelation, collected on the driver with no
+    # Spark job (a bare SELECT is a OneRowRelation, which schedules one).
+    return f"SELECT * FROM VALUES (CAST({n} AS BIGINT)) AS t(count)"
 
 
 # DataFusion OPTIONS key (bare/'quoted', 'format.'-prefixed or not) ->

@@ -47,11 +47,8 @@ def _events_ts_unit(sf_dir: str) -> str:
 
     import pyarrow.parquet as pq
 
-    try:
-        field = pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts")
-        return getattr(field.type, "unit", "us") or "us"
-    except Exception:
-        return "us"
+    field = pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts")
+    return getattr(field.type, "unit", "us") or "us"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

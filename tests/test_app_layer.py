@@ -242,7 +242,7 @@ def test_orc_sql_surface(spark, tmp_path):
 
 def test_arrow_ipc_distributed_roundtrip(spark, tmp_path):
     """Arrow IPC: write via pyarrow, read back distributed (one task per
-    file through mapInPandas), values and schema preserved."""
+    file through the arrowipc DataSource), values and schema preserved."""
     from datafusion_dft_spark.sources.io import read_any, write_any
 
     df = spark.sql("SELECT id, CAST(id * 1.5 AS DOUBLE) AS v FROM range(20)")
@@ -454,8 +454,8 @@ def test_register_db_unreadable_table_names_its_directory(spark, tmp_path):
 
 
 def test_information_schema_columns_of_a_db_table_without_deprecated_call(spark, tmp_path):
-    """Database tables' columns are listed through the qualified
-    one-argument ``listColumns``, which raises no FutureWarning."""
+    """Database tables' columns are listed from the qualified name's
+    resolved schema, which raises no FutureWarning."""
     from datafusion_dft_spark.catalog import register_db
     from datafusion_dft_spark.functions.info_schema import refresh_information_schema
 
@@ -470,6 +470,60 @@ def test_information_schema_columns_of_a_db_table_without_deprecated_call(spark,
         "WHERE table_schema = 'is_schema' AND table_name = 'is_table' ORDER BY ordinal_position"
     ).collect()
     assert [c.column_name for c in cols] == ["a", "b"]
+
+
+def test_information_schema_columns_without_list_columns(spark, sf_dir, monkeypatch):
+    """information_schema.columns is built from each table's resolved
+    schema: with ``Catalog.listColumns`` refusing, the corpus views list
+    the same rows ``listColumns`` gives for them."""
+    from pyspark.sql.catalog import Catalog
+
+    from datafusion_dft_spark.catalog import TABLES
+
+    register_views(spark, sf_dir)
+    views = [t for t in TABLES if spark.catalog.tableExists(t)]
+    expected = {
+        (v, c.name, i + 1, c.dataType, "YES" if c.nullable else "NO")
+        for v in views
+        for i, c in enumerate(spark.catalog.listColumns(v))
+    }
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("listColumns called")
+
+    monkeypatch.setattr(Catalog, "listColumns", refuse)
+    rows = execute_sql(
+        spark,
+        "SELECT table_name, column_name, ordinal_position, data_type, is_nullable "
+        "FROM information_schema.columns WHERE table_schema = 'session'",
+    )[0].collect()
+    got = {tuple(r) for r in rows if r.table_name in views}
+    assert views and got == expected
+
+
+def test_information_schema_unreadable_view_names_it(spark):
+    """A view that no longer resolves raises naming the view, instead of
+    being listed without columns."""
+    spark.range(1).createOrReplaceTempView("is_src_gone")
+    spark.sql("CREATE OR REPLACE TEMP VIEW is_broken_view AS SELECT * FROM is_src_gone")
+    spark.catalog.dropTempView("is_src_gone")
+    try:
+        with pytest.raises(ValueError, match="is_broken_view"):
+            execute_sql(spark, "SELECT * FROM information_schema.columns")
+    finally:
+        spark.catalog.dropTempView("is_broken_view")
+
+
+def test_copy_count_row_runs_no_job(spark, sf_dir, tmp_path):
+    """COPY's count row is a LocalRelation: collecting it schedules no
+    Spark job, so the whole statement runs one job (the write)."""
+    register_views(spark, sf_dir)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    dfs = execute_sql(spark, f"COPY region TO '{tmp_path / 'r.parquet'}'")
+    assert dfs[-1].limit(1000).collect()[0]["count"] == 5
+    assert scheduler.nextJobId() - before == 1
+    assert dfs[-1].schema.simpleString() == "struct<count:bigint>"
 
 
 def test_parquet_metadata_column_parity_with_reference():
@@ -557,12 +611,16 @@ def test_tune_runtime_conf_hadoop_fs_uri(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_tune_runtime_conf_unreachable_store_keeps_defaults(spark):
+def test_input_bytes_unreachable_store_raises(spark, tmp_path):
+    """A store that cannot be listed (no s3a connector in the test
+    session) raises naming the URI; an empty listing still gives 0."""
     from datafusion_dft_spark.session import _input_bytes
 
-    # No s3a connector conf for this bucket in the test session: the
-    # listing must fail soft (0), leaving static defaults in place.
-    assert _input_bytes(spark, "s3a://nonexistent-bucket-for-test/prefix") == 0
+    uri = "s3a://nonexistent-bucket-for-test/prefix"
+    with pytest.raises(OSError, match=re.escape(uri)):
+        _input_bytes(spark, uri)
+    assert _input_bytes(spark, str(tmp_path)) == 0
+    assert _input_bytes(spark, str(tmp_path / "missing")) == 0
 
 
 def test_vortex_gate_raises_actionable_error(spark, tmp_path):

@@ -27,9 +27,12 @@ def _write_ipc(path, table):
         w.write_table(table)
 
 
-def test_register_idempotent(spark):
-    assert register_arrow_datasource(spark)
-    assert register_arrow_datasource(spark)  # second call is a no-op
+def test_register_idempotent(spark, monkeypatch):
+    register_arrow_datasource(spark)
+    calls = []
+    monkeypatch.setattr(type(spark.dataSource), "register", lambda self, cls: calls.append(cls))
+    register_arrow_datasource(spark)  # second call is a no-op
+    assert calls == []
 
 
 def test_read_partition_per_file(spark, tmp_path):
@@ -38,7 +41,7 @@ def test_read_partition_per_file(spark, tmp_path):
     for i in range(3):
         t = pa.table({"a": pa.array(range(i * 10, (i + 1) * 10), pa.int64())})
         _write_ipc(src / f"f{i}.arrow", t)
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     df = spark.read.format(FORMAT_NAME).load(str(src))
     assert df.rdd.getNumPartitions() == 3
     assert df.count() == 30
@@ -46,7 +49,7 @@ def test_read_partition_per_file(spark, tmp_path):
 
 
 def test_distributed_write_roundtrip_and_overwrite(spark, tmp_path):
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     df = spark.sql("SELECT id, CAST(id * 1.5 AS DOUBLE) AS v FROM range(40)")
     out = str(tmp_path / "out")
     df.repartition(4).write.format(FORMAT_NAME).mode("overwrite").save(out)
@@ -64,7 +67,7 @@ def test_distributed_write_roundtrip_and_overwrite(spark, tmp_path):
 
 
 def test_empty_partitions_write_no_files(spark, tmp_path):
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     df = spark.range(5).repartition(8)
     out = str(tmp_path / "sparse")
     df.write.format(FORMAT_NAME).mode("append").save(out)
@@ -78,14 +81,14 @@ def test_schema_mismatch_across_files_refused(spark, tmp_path):
     src.mkdir()
     _write_ipc(src / "a.arrow", pa.table({"a": pa.array([1, 2], pa.int64())}))
     _write_ipc(src / "b.arrow", pa.table({"b": pa.array([3, 4], pa.int64())}))
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     df = spark.read.format(FORMAT_NAME).load(str(src))
     with pytest.raises(Exception, match="must share a schema"):
         df.collect()
 
 
 def test_write_to_existing_file_path_refused(spark, tmp_path):
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     f = tmp_path / "one.arrow"
     _write_ipc(f, pa.table({"a": pa.array([1], pa.int64())}))
     with pytest.raises(Exception, match="DIRECTORY of part files"):
@@ -97,7 +100,7 @@ def test_type_fidelity_decimal_timestamp(spark, tmp_path):
     the old driver-side path went DataFrame->pandas->Arrow, which turns
     DECIMAL into object/float dtype; the DataSource writer receives
     Spark's own Arrow batches."""
-    assert register_arrow_datasource(spark)
+    register_arrow_datasource(spark)
     df = spark.sql(
         "SELECT CAST(id AS DECIMAL(12,2)) / 4 AS m, "
         "timestamp'2024-01-02 03:04:05' + make_interval(0,0,0,0,0,0,id) AS ts "
@@ -117,7 +120,7 @@ def test_type_fidelity_decimal_timestamp(spark, tmp_path):
 
 def test_read_any_prefers_datasource(spark, tmp_path):
     """read_any on .arrow goes through the registered source (the scan
-    shows up as a DataSourceV2 python scan, not the mapInPandas glue)."""
+    shows up as a DataSourceV2 python scan)."""
     from datafusion_dft_spark.sources.io import read_any, write_any
 
     df = spark.range(6)
@@ -129,17 +132,29 @@ def test_read_any_prefers_datasource(spark, tmp_path):
     assert back.count() == 6
 
 
-def test_mapinpandas_fallback_still_correct(spark, tmp_path):
-    """The pre-DataSource glue stays as the documented fallback."""
-    from datafusion_dft_spark.sources.io import _read_arrow_mapinpandas
+def test_registration_failure_propagates(spark, tmp_path, monkeypatch):
+    """The DataSource is the one reader and directory writer: a failed
+    registration raises instead of switching to another code path."""
+    from datafusion_dft_spark.sources.io import read_arrow, write_any
 
-    src = tmp_path / "fb"
+    src = tmp_path / "in"
     src.mkdir()
     _write_ipc(src / "a.arrow", pa.table({"a": pa.array([1, 2, 3], pa.int64())}))
-    _write_ipc(src / "b.arrow", pa.table({"a": pa.array([4, 5], pa.int64())}))
-    df = _read_arrow_mapinpandas(spark, str(src))
-    assert df.rdd.getNumPartitions() == 2
-    assert sorted(r.a for r in df.collect()) == [1, 2, 3, 4, 5]
+
+    class _Refused(RuntimeError):
+        pass
+
+    def refuse(cls):
+        raise _Refused(f"cannot register {cls.__name__}")
+
+    monkeypatch.setattr(type(spark.dataSource), "register", lambda self, cls: refuse(cls))
+    monkeypatch.setattr(spark, "_arrowipc_registered", False, raising=False)
+    with pytest.raises(_Refused, match="ArrowIpcDataSource"):
+        read_arrow(spark, str(src))
+    out = tmp_path / "out_dir"
+    with pytest.raises(_Refused, match="ArrowIpcDataSource"):
+        write_any(spark.range(3), str(out), fmt="arrow")
+    assert not out.exists()
 
 
 def test_write_any_distributed_dir_target(spark, tmp_path):

@@ -10,12 +10,13 @@ from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from datafusion_dft_spark.sources.delta import DeltaNotAvailable, read_delta
+from datafusion_dft_spark.sources.delta import DeltaNotAvailable, delta_available, read_delta
 from datafusion_dft_spark.sql import prepare_statement
 
 SCHEMA_JSON = json.dumps(
@@ -614,3 +615,24 @@ def test_time_travel_before_protocol_upgrade_still_reads(spark, tmp_path):
     assert read_delta(spark, str(root), version=0).count() == 2
     with pytest.raises(DeltaNotAvailable, match="minReaderVersion=3"):
         read_delta(spark, str(root))
+
+
+def _stub_spark(for_name):
+    """Just enough of a session for delta_available's class probe."""
+    lang = SimpleNamespace(Class=SimpleNamespace(forName=for_name))
+    return SimpleNamespace(_jvm=SimpleNamespace(java=SimpleNamespace(lang=lang)))
+
+
+def test_delta_available_only_catches_missing_class(spark):
+    """A missing class is 'not available'; any other failure propagates."""
+
+    def missing(_name):
+        return spark._jvm.java.lang.Class.forName("org.example.NoSuchDeltaLog")
+
+    assert delta_available(_stub_spark(missing)) is False
+
+    def broken(_name):
+        raise TypeError("jvm gateway broken")
+
+    with pytest.raises(TypeError, match="gateway broken"):
+        delta_available(_stub_spark(broken))

@@ -45,6 +45,20 @@ def test_json_bytes_not_mistaken_for_protobuf():
     assert fsp.command_to_dict(b'{"type": "statement", "query": "SELECT 1"}') is None
 
 
+def test_unpack_any_garbage_is_none_other_errors_propagate(monkeypatch):
+    """Bytes that are not a protobuf Any give None; an error the codec
+    does not raise on such bytes is not swallowed."""
+    for garbage in (b"\xff\xff", b"\x0f", b"\x08\x01", b"\x0a\x02\xff\xfe", b"junk"):
+        assert fsp.unpack_any(garbage) is None
+
+    def broken(_buf):
+        raise RuntimeError("codec bug")
+
+    monkeypatch.setattr(fsp, "decode_fields", broken)
+    with pytest.raises(RuntimeError, match="codec bug"):
+        fsp.unpack_any(fsp.pack_any("CommandStatementQuery", b""))
+
+
 def test_command_round_trips():
     for cmd in [
         {"type": "catalogs"},

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_dft_spark.catalog import load_tables
 from datafusion_dft_spark.streaming.events import (
+    _events_ts_unit,
     dedup_stream,
     read_events_stream,
     run_to_memory,
@@ -209,3 +211,9 @@ def test_stateful_funnel_matches_batch(spark, sf_dir):
         want[r.user_id] = stage
     assert got == want
     assert set(got.values()) != {0}  # non-vacuous: someone advanced
+
+
+def test_events_ts_unit_missing_footer_raises(tmp_path):
+    """No events.parquet: the footer read raises instead of guessing a unit."""
+    with pytest.raises(FileNotFoundError):
+        _events_ts_unit(str(tmp_path))

@@ -3,7 +3,7 @@
 vortex-python is absent in this container, so `sources/io.py`'s Vortex
 path had only its NotImplementedError gate under test. This test runs
 the FULL glue — `_require_vortex`, `_vortex_file_to_arrow`'s API
-probing, the distributed `read_vortex` mapInPandas scan, and
+probing, the distributed `read_vortex` DataSource scan, and
 `write_any`'s writer-API discovery — in a subprocess whose PYTHONPATH
 carries a fake `vortex` package implementing the documented surface
 (`vortex.open(path).to_arrow_table()`, `vortex.io.write(table, path)`)
@@ -74,7 +74,7 @@ DRIVER = textwrap.dedent(
     out = sys.argv[2] + "/t.vortex"
     src = spark.range(100).selectExpr("id", "CAST(id * 2 AS STRING) AS s")
     write_any(src, out)  # writer-API discovery path
-    back = read_vortex(spark, out)  # distributed mapInPandas scan
+    back = read_vortex(spark, out)  # distributed DataSource scan
     rows = sorted((r.id, r.s) for r in back.collect())
     assert rows == [(i, str(i * 2)) for i in range(100)], rows[:5]
     assert read_any(spark, out).count() == 100  # suffix inference
@@ -95,7 +95,7 @@ DRIVER = textwrap.dedent(
         register_vortex_datasource,
     )
 
-    assert register_vortex_datasource(spark)
+    register_vortex_datasource(spark)
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "BatchScan" in plan or "PythonDataSource" in plan, plan
 
@@ -106,11 +106,6 @@ DRIVER = textwrap.dedent(
     dist_back = read_vortex(spark, dist_dir)
     assert dist_back.rdd.getNumPartitions() == 2
     assert sorted((r.id, r.s) for r in dist_back.collect()) == rows
-
-    # fallback glue stays correct
-    from datafusion_dft_spark.sources.io import _read_vortex_mapinpandas
-
-    assert _read_vortex_mapinpandas(spark, dist_dir).count() == 100
     print("VORTEX-GLUE-OK")
     """
 )
